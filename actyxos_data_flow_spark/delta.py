@@ -148,20 +148,25 @@ def delta_agg_sum(old_agg: DataFrame, delta: DataFrame, keys, val: str, out: str
     j = contrib.join(old, cond, "left").select(
         *[F.col(f"_c.{k}").alias(k) for k in keys], "_dv", "_dn", "_ov", "_on"
     )
-    new_rows = j.select(
-        *keys,
+    # both rows of a key come from ONE pass over the join — a union of
+    # retract and insert branches would run the churn aggregate and read
+    # the old aggregate once per branch. Keys stay outside the exploded
+    # struct, so the rows keep the join's hash partitioning and
+    # consolidate needs no shuffle.
+    retract = F.struct(F.col("_ov").alias(out), F.col("_on").alias("_n"), F.lit(-1).alias(DELTA_COL))
+    insert = F.struct(
         (F.coalesce(F.col("_ov"), F.lit(0)) + F.col("_dv")).alias(out),
         (F.coalesce(F.col("_on"), F.lit(0)) + F.col("_dn")).cast("long").alias("_n"),
+        F.lit(1).alias(DELTA_COL),
     )
-    retract = (
-        j.filter(F.col("_ov").isNotNull())
-        .select(*keys, F.col("_ov").alias(out), F.col("_on").alias("_n"), F.lit(-1).alias(DELTA_COL))
+    rows = j.select(*keys, F.explode(F.array(retract, insert)).alias("_r")).select(*keys, "_r.*")
+    # an old row exists iff its count does: its SUM may be NULL (all
+    # values NULL) and must still be retracted
+    return consolidate(
+        rows.filter(
+            F.when(F.col(DELTA_COL) == -1, F.col("_n").isNotNull()).otherwise(F.col("_n") > 0)
+        )
     )
-    insert = (
-        new_rows.filter(F.col("_n") > 0)
-        .select(*keys, out, "_n", F.lit(1).alias(DELTA_COL))
-    )
-    return consolidate(retract.unionByName(insert))
 
 
 def delta_agg_next(old_agg: DataFrame, agg_delta: DataFrame, keys=None) -> DataFrame:
@@ -178,7 +183,9 @@ def delta_agg_next(old_agg: DataFrame, agg_delta: DataFrame, keys=None) -> DataF
     else:
         keys = list(keys)
     plus = agg_delta.filter(F.col(DELTA_COL) == 1).select(*cols)
-    minus_keys = agg_delta.filter(F.col(DELTA_COL) == -1).select(*keys).distinct()
+    # duplicate keys would be harmless: a left_anti join ignores
+    # duplicate right-hand rows (delta_agg_sum emits one per key anyway)
+    minus_keys = agg_delta.filter(F.col(DELTA_COL) == -1).select(*keys)
     # one anti-join suffices: delta_agg_sum emits a −1 retraction for
     # EVERY touched key that existed in old_agg, so plus-rows for
     # existing keys are already covered by minus_keys, and plus-rows

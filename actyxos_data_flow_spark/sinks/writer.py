@@ -4,7 +4,7 @@ apply).
 
 Scale design: the previous committed snapshot of every table lives as a
 **parquet mirror** on shared storage, so the per-epoch diff is a
-distributed full-outer join between two Spark-readable snapshots —
+distributed union + aggregate over two Spark-readable snapshots —
 O(|view|) cluster work, O(churn) driver traffic. Only the NET delta
 (which scales with the view's churn, not with the input — K2
 consolidation runs distributed first) is collected for the single-writer
@@ -14,28 +14,34 @@ batches through an in-process channel
 the same batches would be applied per-partition via foreachPartition.
 
 Crash consistency: the mirror pointer (`_mirror_state`) commits in the
-SAME sink transaction as the delta and offsets, and each epoch writes to
-its own directory keyed by the offsets it reflects, so
+SAME sink transaction as the delta and offsets. Each epoch first writes
+its new snapshot to a directory keyed by the offsets it reflects, then
+diffs the committed mirror against the parquet just written — the view
+is evaluated once, by that write. One rule keeps the order safe: never
+write over the directory the committed pointer names. When the pointer
+already names this epoch's key (a retry after commit, or two
+structured-streaming micro-batches sharing a max offset), the snapshot
+goes to a sibling directory (``<key>.alt``) and the pointer commits to
+that sibling. So
 
-- crash after parquet write, before commit → pointer still names the old
-  epoch; the retry recomputes the same delta and overwrites the same
-  (orphaned) epoch directory — idempotent;
-- retry after commit → diff against the just-committed mirror is empty.
-
-If the mirror directory is lost (e.g. a fresh temp dir after restart),
-the writer rebuilds it once from the sink's stored rows — a recovery
-path only, never the steady-state loop.
+- crash after parquet write, before commit → the pointer still names the
+  old, untouched directory; the retry rewrites the same orphaned
+  directory and diffs against the old one — idempotent;
+- retry after commit → the snapshot lands in the sibling, and its diff
+  against the just-committed mirror is empty;
+- after each commit every directory but the pointer's is pruned.
 """
 
 from __future__ import annotations
 
+import os
 import shutil
 from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..delta import DELTA_COL, consolidate, snapshot_diff
-from .spec import DbTable, Union
+from .spec import DbTable
 from .dbapi import DbapiSink
 
 
@@ -49,7 +55,7 @@ def deltas_to_rows(delta_df: DataFrame, table: DbTable) -> list[tuple[tuple, int
 
 def _epoch_key(offsets: Mapping[str, int]) -> str:
     """Deterministic directory key for the offsets a snapshot reflects —
-    a retried batch maps to the same epoch and overwrites itself."""
+    a retried batch maps to the same epoch and overwrites its orphan."""
     return "_".join(f"{k}-{v}" for k, v in sorted(offsets.items())) or "empty"
 
 
@@ -64,6 +70,9 @@ class SnapshotMirror:
     def _dir(self, table: DbTable, epoch: str) -> str:
         return f"{self.root}/{table.name}/{epoch}"
 
+    def read(self, table: DbTable, epoch: str, schema) -> DataFrame:
+        return self.spark.read.schema(schema).parquet(self._dir(table, epoch))
+
     def read_previous(self, sink: DbapiSink, table: DbTable, schema) -> DataFrame:
         """The snapshot the sink's rows currently reflect, as a
         DataFrame. Empty if nothing committed yet; rebuilt from the sink
@@ -77,7 +86,7 @@ class SnapshotMirror:
                 return self.spark.createDataFrame(rows, schema=schema)
             return self.spark.createDataFrame([], schema=schema)
         try:
-            return self.spark.read.schema(schema).parquet(self._dir(table, epoch))
+            return self.read(table, epoch, schema)
         except Exception:  # noqa: BLE001 — dir lost: recovery rebuild
             return self.spark.createDataFrame(sink.rows(table), schema=schema)
 
@@ -86,10 +95,7 @@ class SnapshotMirror:
 
     def prune(self, table: DbTable, keep_epoch: str) -> None:
         """Best-effort removal of superseded epoch directories."""
-        shutil.rmtree(f"{self.root}/{table.name}/_tmp", ignore_errors=True)
         try:
-            import os
-
             for d in os.listdir(f"{self.root}/{table.name}"):
                 if d != keep_epoch:
                     shutil.rmtree(f"{self.root}/{table.name}/{d}", ignore_errors=True)
@@ -98,20 +104,14 @@ class SnapshotMirror:
 
 
 def snapshot_delta(
-    spark: SparkSession,
-    sink: DbapiSink,
-    table: DbTable,
-    new_snapshot: DataFrame,
-    mirror: SnapshotMirror,
+    sink: DbapiSink, table: DbTable, mirror: SnapshotMirror, written: str, schema
 ) -> DataFrame:
-    """The (distributed, uncollected) net-delta plan for one table:
-    full-outer count-diff of the mirror vs the new snapshot. Exposed so
-    tests can assert the physical plan has no single-partition
-    exchange."""
-    cols = [c.name for c in table.written_columns]
-    new = new_snapshot.select(*cols)
-    old = mirror.read_previous(sink, table, schema=new.schema)
-    return snapshot_diff(old, new)
+    """The (distributed, uncollected) net-delta plan for one table: the
+    committed mirror vs the snapshot just written under ``written`` —
+    two parquet scans, one union and one aggregate. Exposed so tests can
+    assert the physical plan has no single-partition exchange."""
+    old = mirror.read_previous(sink, table, schema=schema)
+    return snapshot_diff(old, mirror.read(table, written, schema))
 
 
 DISTRIBUTED_DELTA_THRESHOLD = 100_000
@@ -133,10 +133,12 @@ def write_snapshots(
     with the offsets they reflect. Returns per-table applied delta-row
     counts.
 
-    Per table: diff distributed against the parquet mirror, ship only
-    the net delta, stage the new snapshot under this epoch's directory;
-    then a single sink transaction applies every delta + offsets + the
-    mirror pointers. Idempotent per the module docstring.
+    Per table: write the new snapshot to this epoch's mirror directory
+    (the view's one evaluation; never the directory the committed
+    pointer names — see the module docstring), then diff the committed
+    mirror against the parquet just written and ship only the net delta;
+    a single sink transaction applies every delta + offsets + the mirror
+    pointers, then superseded directories are pruned. Idempotent.
 
     Delta shipping has two topologies:
 
@@ -155,63 +157,52 @@ def write_snapshots(
     counted first and the staged path engages automatically when ANY
     table's delta exceeds ``distributed_threshold`` rows — a backfill
     epoch can no longer OOM the driver just because nobody opted in.
-    Without either, the driver-side path applies unconditionally."""
+    The size probe and the apply each re-read the two parquet snapshots
+    of the diff, never the log. Without either, the driver-side path
+    applies unconditionally."""
     epoch = _epoch_key(offsets)
-    mirror_epochs = {t.name: epoch for t, _ in views}
-
-    # Compute every delta ONCE; persist so size-probe and apply share
-    # the diff join (and so the delta is materialized BEFORE the mirror
-    # overwrite — on a same-epoch retry old and new share the directory).
-    prepared: list[tuple[DbTable, DataFrame, DataFrame]] = []
+    mirror_epochs: dict[str, str] = {}
+    deltas: list[tuple[DbTable, DataFrame]] = []
     for table, new_snapshot in views:
         new = new_snapshot.select(*[c.name for c in table.written_columns])
-        delta = snapshot_delta(spark, sink, table, new, mirror).persist()
-        prepared.append((table, new, delta))
+        # never write over the directory the committed pointer names
+        written = f"{epoch}.alt" if sink.mirror_epoch(table.name) == epoch else epoch
+        mirror_epochs[table.name] = written
+        mirror.write(table, new, written)
+        deltas.append((table, snapshot_delta(sink, table, mirror, written, new.schema)))
 
     if applier is None and conn_factory is not None:
         if any(
             delta.limit(distributed_threshold + 1).count() > distributed_threshold
-            for _, _, delta in prepared
+            for _, delta in deltas
         ):
             from .distributed import DistributedApplier
 
             applier = DistributedApplier(conn_factory, sink.dialect)
 
-    try:
-        if applier is not None:
-            staged: list[DbTable] = []
-            for table, new, delta in prepared:
-                applier.ensure_stage(sink, table)
-                # stage BEFORE overwriting the mirror
-                applier.stage(delta, table, epoch)
-                mirror.write(table, new, epoch)
-                staged.append(table)
-            results = applier.finalize_many(
-                sink, staged, epoch, dict(offsets),
-                offsets_table=offsets_table, mirror_epochs=mirror_epochs,
-            )
-            for table, _, _ in prepared:
-                mirror.prune(table, epoch)
-            return {name: ins + dels for name, (ins, dels) in results.items()}
+    if applier is not None:
+        for table, delta in deltas:
+            applier.ensure_stage(sink, table)
+            applier.stage(delta, table, epoch)
+        results = applier.finalize_many(
+            sink, [t for t, _ in deltas], epoch, dict(offsets),
+            offsets_table=offsets_table, mirror_epochs=mirror_epochs,
+        )
+        applied = {name: ins + dels for name, (ins, dels) in results.items()}
+    else:
         batches: dict[DbTable, list[tuple[tuple, int]]] = {}
-        for table, new, delta in prepared:
+        for table, delta in deltas:
             cols = [c.name for c in table.written_columns]
             batches[table] = [
                 (tuple(r[c] for c in cols), r[DELTA_COL]) for r in delta.collect()
             ]
-            mirror.write(table, new, epoch)
         sink.advance_offsets(
-            batches,
-            dict(offsets),
-            offsets_table=offsets_table,
-            mirror_epochs=mirror_epochs,
+            batches, dict(offsets), offsets_table=offsets_table, mirror_epochs=mirror_epochs
         )
-        for table, _, _ in prepared:
-            mirror.prune(table, epoch)
-        return {t.name: len(b) for t, b in batches.items()}
-    finally:
-        for _, _, delta in prepared:
-            delta.unpersist()
+        applied = {t.name: len(b) for t, b in batches.items()}
+    for table, _ in deltas:
+        mirror.prune(table, mirror_epochs[table.name])
+    return applied
 
 
 def write_snapshot(

@@ -167,9 +167,11 @@ class IncrementalAggRunner:
     for exactly the touched keys — then applied with the offsets in one
     transaction (``writer.write_delta`` shape). The running aggregate
     lives in the parquet mirror; its pointer commits in the SAME
-    transaction, so crash/retry semantics match the snapshot path:
-    a replayed epoch recomputes the identical delta (deterministic
-    inputs) and overwrites its own epoch directory.
+    transaction, so crash/retry semantics match the snapshot path: an
+    epoch retried after a crash recomputes the identical delta
+    (deterministic inputs) and rewrites its own orphaned directory; a
+    committed epoch is never re-run, so the committed directory is never
+    written over.
 
     Scale: epoch cost is one churn-sized aggregate + one equi-join
     against the old aggregate's touched keys — independent of history
@@ -194,8 +196,6 @@ class IncrementalAggRunner:
         offset_col: str = "event_id",
         mirror_dir: str | None = None,
     ):
-        from ..sinks.writer import SnapshotMirror
-
         self.spark = spark
         self.sink = sink
         self.table = table
@@ -241,12 +241,16 @@ class IncrementalAggRunner:
         old_agg = self.mirror.read_previous(
             self.sink, self.table, schema=self._agg_schema(prepared)
         )
+        epoch = f"{self.source_name}-{upto}"
+        # persisted: the collect and the fold share one evaluation
         agg_delta = delta_agg_sum(
             old_agg, with_delta(prepared), self.keys, self.val_col, self.out_col
-        )
-        batch = deltas_to_rows(agg_delta, self.table)
-        epoch = f"{self.source_name}-{upto}"
-        self.mirror.write(self.table, delta_agg_next(old_agg, agg_delta), epoch)
+        ).persist()
+        try:
+            batch = deltas_to_rows(agg_delta, self.table)
+            self.mirror.write(self.table, delta_agg_next(old_agg, agg_delta), epoch)
+        finally:
+            agg_delta.unpersist()
         self.sink.advance_offsets(
             {self.table: batch},
             {self.source_name: upto},

@@ -116,3 +116,19 @@ def test_delta_agg_sum_null_key(spark):
     assert got == [(None, 100.0, 2, -1), (None, 105.0, 3, 1)]
     nxt = sorted((tuple(r) for r in delta_agg_next(old, d, keys=["k"]).collect()), key=skey)
     assert nxt == [(None, 105.0, 3), ("x", 10.0, 1)]
+
+
+def test_delta_agg_sum_retracts_null_sum_row(spark):
+    """A group whose stored SUM is NULL (every value NULL) still has a
+    row in the sink: touching it must retract that row, or the sink
+    keeps two rows for one key."""
+    from actyxos_data_flow_spark.delta import delta_agg_next, delta_agg_sum
+
+    old = spark.createDataFrame([("a", None, 1), ("b", 4, 1)], "k string, total long, _n long")
+    delta = spark.createDataFrame([("a", 5, 1)], "k string, val long, delta long")
+    d = delta_agg_sum(old, delta, ["k"], "val", "total")
+    assert {tuple(r) for r in d.collect()} == {("a", None, 1, -1), ("a", 5, 2, 1)}
+    assert sorted(tuple(r) for r in delta_agg_next(old, d, keys=["k"]).collect()) == [
+        ("a", 5, 2),
+        ("b", 4, 1),
+    ]
