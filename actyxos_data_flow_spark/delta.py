@@ -131,7 +131,14 @@ def delta_agg_sum(old_agg: DataFrame, delta: DataFrame, keys, val: str, out: str
     One aggregate over the delta (churn-sized), one equi-join against
     the touched keys of the old snapshot. Keys whose row count reaches
     zero emit only the retraction; brand-new keys only the insert. Use
-    ``delta_agg_next`` to also get the updated snapshot."""
+    ``delta_agg_next`` to also get the updated snapshot.
+
+    NULL values follow SQL ``SUM`` whenever the churn only inserts
+    (every runner epoch on an append-only log): an epoch bringing only
+    NULLs keeps the old sum, and a key with only NULLs sums to NULL.
+    Not covered: a retraction that removes a key's last non-NULL value
+    leaves 0 where SQL gives NULL — that needs a non-NULL count per key,
+    which the (keys, sum, ``_n``) row does not keep."""
     keys = list(keys)
     contrib = delta.groupBy(*keys).agg(
         F.sum(F.col(val) * F.col(DELTA_COL)).alias("_dv"),
@@ -155,7 +162,7 @@ def delta_agg_sum(old_agg: DataFrame, delta: DataFrame, keys, val: str, out: str
     # consolidate needs no shuffle.
     retract = F.struct(F.col("_ov").alias(out), F.col("_on").alias("_n"), F.lit(-1).alias(DELTA_COL))
     insert = F.struct(
-        (F.coalesce(F.col("_ov"), F.lit(0)) + F.col("_dv")).alias(out),
+        F.coalesce(F.col("_ov") + F.col("_dv"), F.col("_ov"), F.col("_dv")).alias(out),
         (F.coalesce(F.col("_on"), F.lit(0)) + F.col("_dn")).cast("long").alias("_n"),
         F.lit(1).alias(DELTA_COL),
     )

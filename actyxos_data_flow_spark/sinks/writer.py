@@ -14,19 +14,23 @@ batches through an in-process channel
 the same batches would be applied per-partition via foreachPartition.
 
 Crash consistency: the mirror pointer (`_mirror_state`) commits in the
-SAME sink transaction as the delta and offsets. Each epoch first writes
-its new snapshot to a directory keyed by the offsets it reflects, then
-diffs the committed mirror against the parquet just written — the view
-is evaluated once, by that write. One rule keeps the order safe: never
-write over the directory the committed pointer names. When the pointer
-already names this epoch's key (a retry after commit, or two
-structured-streaming micro-batches sharing a max offset), the snapshot
-goes to a sibling directory (``<key>.alt``) and the pointer commits to
-that sibling. So
+SAME sink transaction as the delta and offsets. An epoch writes its new
+snapshot to a directory keyed by the offsets it reflects. A recomputed
+view's snapshot is written first, and the committed mirror is diffed
+against the parquet just written — the view is evaluated once, by that
+write. A snapshot derived from a given delta (the aggregate runner's
+fold) is written after that delta ships (collected or staged) and
+before the commit, so the shipping fills the delta's cache. One rule
+keeps either order safe: never write over the directory the committed
+pointer names. When the pointer already names this epoch's key (a retry
+after commit, or two structured-streaming micro-batches sharing a max
+offset), the snapshot goes to a sibling directory (``<key>.alt``) and
+the pointer commits to that sibling. So
 
-- crash after parquet write, before commit → the pointer still names the
-  old, untouched directory; the retry rewrites the same orphaned
-  directory and diffs against the old one — idempotent;
+- crash after the delta shipped or the parquet was written, before the
+  commit → the pointer still names the old, untouched directory; the
+  retry recomputes the same delta, rewrites the same orphaned directory
+  and diffs against the old one — idempotent;
 - retry after commit → the snapshot lands in the sibling, and its diff
   against the just-committed mirror is empty;
 - after each commit every directory but the pointer's is pruned.
@@ -40,16 +44,17 @@ from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..delta import DELTA_COL, consolidate, snapshot_diff
+from ..delta import DELTA_COL, snapshot_diff
 from .spec import DbTable
 from .dbapi import DbapiSink
 
 
 def deltas_to_rows(delta_df: DataFrame, table: DbTable) -> list[tuple[tuple, int]]:
-    """Collect a consolidated delta DataFrame as (row_values, mult)
-    pairs ordered by the table's written columns."""
+    """Collect an already-consolidated delta DataFrame as (row_values,
+    mult) pairs ordered by the table's written columns — the driver-side
+    path's one collect."""
     cols = [c.name for c in table.written_columns]
-    rows = consolidate(delta_df).select(*cols, DELTA_COL).collect()
+    rows = delta_df.select(*cols, DELTA_COL).collect()
     return [(tuple(r[c] for c in cols), r[DELTA_COL]) for r in rows]
 
 
@@ -127,18 +132,23 @@ def write_snapshots(
     applier=None,
     conn_factory=None,
     distributed_threshold: int = DISTRIBUTED_DELTA_THRESHOLD,
+    deltas: Mapping[str, DataFrame] | None = None,
 ) -> dict[str, int]:
     """Materialize several snapshots (one input stream → up to N record
     types, /root/reference/src/db/mod.rs:230-244) in ONE transaction
-    with the offsets they reflect. Returns per-table applied delta-row
-    counts.
+    with the offsets they reflect — the one IVM commit path. Returns
+    per-table applied delta-row counts.
 
     Per table: write the new snapshot to this epoch's mirror directory
     (the view's one evaluation; never the directory the committed
     pointer names — see the module docstring), then diff the committed
-    mirror against the parquet just written and ship only the net delta;
-    a single sink transaction applies every delta + offsets + the mirror
-    pointers, then superseded directories are pruned. Idempotent.
+    mirror against the parquet just written and ship only the net delta.
+    A table named in ``deltas`` instead ships the consolidated delta it
+    is given (true IVM, e.g. ``delta.delta_agg_sum``), and its snapshot
+    (e.g. ``delta.delta_agg_next`` of that delta) is written after the
+    delta ships. A single sink transaction applies every delta + offsets
+    + the mirror pointers, then superseded directories are pruned.
+    Idempotent.
 
     Delta shipping has two topologies:
 
@@ -161,46 +171,53 @@ def write_snapshots(
     of the diff, never the log. Without either, the driver-side path
     applies unconditionally."""
     epoch = _epoch_key(offsets)
+    given = deltas or {}
     mirror_epochs: dict[str, str] = {}
-    deltas: list[tuple[DbTable, DataFrame]] = []
+    shipped: list[tuple[DbTable, DataFrame]] = []
+    derived: list[tuple[DbTable, DataFrame]] = []
     for table, new_snapshot in views:
         new = new_snapshot.select(*[c.name for c in table.written_columns])
         # never write over the directory the committed pointer names
         written = f"{epoch}.alt" if sink.mirror_epoch(table.name) == epoch else epoch
         mirror_epochs[table.name] = written
-        mirror.write(table, new, written)
-        deltas.append((table, snapshot_delta(sink, table, mirror, written, new.schema)))
+        if table.name in given:
+            shipped.append((table, given[table.name]))
+            derived.append((table, new))
+        else:
+            mirror.write(table, new, written)
+            shipped.append((table, snapshot_delta(sink, table, mirror, written, new.schema)))
 
     if applier is None and conn_factory is not None:
         if any(
             delta.limit(distributed_threshold + 1).count() > distributed_threshold
-            for _, delta in deltas
+            for _, delta in shipped
         ):
             from .distributed import DistributedApplier
 
             applier = DistributedApplier(conn_factory, sink.dialect)
 
     if applier is not None:
-        for table, delta in deltas:
+        for table, delta in shipped:
             applier.ensure_stage(sink, table)
             applier.stage(delta, table, epoch)
+    else:
+        batches = {table: deltas_to_rows(delta, table) for table, delta in shipped}
+    # after the collect or stage: shipping, not the write, fills the
+    # given delta's cache (written first, the fold re-runs its branches)
+    for table, new in derived:
+        mirror.write(table, new, mirror_epochs[table.name])
+    if applier is not None:
         results = applier.finalize_many(
-            sink, [t for t, _ in deltas], epoch, dict(offsets),
+            sink, [t for t, _ in shipped], epoch, dict(offsets),
             offsets_table=offsets_table, mirror_epochs=mirror_epochs,
         )
         applied = {name: ins + dels for name, (ins, dels) in results.items()}
     else:
-        batches: dict[DbTable, list[tuple[tuple, int]]] = {}
-        for table, delta in deltas:
-            cols = [c.name for c in table.written_columns]
-            batches[table] = [
-                (tuple(r[c] for c in cols), r[DELTA_COL]) for r in delta.collect()
-            ]
         sink.advance_offsets(
             batches, dict(offsets), offsets_table=offsets_table, mirror_epochs=mirror_epochs
         )
         applied = {t.name: len(b) for t, b in batches.items()}
-    for table, _ in deltas:
+    for table, _ in shipped:
         mirror.prune(table, mirror_epochs[table.name])
     return applied
 
@@ -218,26 +235,3 @@ def write_snapshot(
         table.name
     ]
 
-
-def write_delta(
-    spark: SparkSession,
-    sink: DbapiSink,
-    table: DbTable,
-    delta_df: DataFrame,
-    offsets: Mapping[str, int],
-    offsets_table: str | None = None,
-) -> int:
-    """Apply a PRECOMPUTED consolidated delta — the true-IVM epoch.
-
-    Where :func:`write_snapshot` recomputes the view and diffs against
-    the mirror (exact for arbitrary DAGs, cost O(|view|) cluster-side),
-    this path takes the delta straight from the incremental operators
-    (``delta.delta_join`` / ``delta.delta_agg_sum``) — cost O(churn)
-    end-to-end — and applies it with the offsets in ONE transaction,
-    same exactly-once contract. The caller owns snapshot consistency
-    (``delta.delta_agg_next`` folds the delta into the next base); the
-    offsets table remains the resume point, so a crashed epoch replays
-    from its source offsets rather than re-applying a remembered delta."""
-    batch = deltas_to_rows(delta_df, table)
-    sink.advance_offsets({table: batch}, dict(offsets), offsets_table=offsets_table)
-    return len(batch)

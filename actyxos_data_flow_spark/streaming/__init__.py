@@ -6,16 +6,19 @@ between the DB's stored offsets and "now", committing every
 ``events_per_txn`` events), and live (subscribe + flush every tick).
 In Spark these collapse into micro-batch semantics:
 
-- :class:`runner.IncrementalRunner` — the batch-incremental loop:
-  recompute the view on the offset-bounded prefix of the log, diff
-  against the sink's stored rows, apply the net delta + offsets in one
-  transaction. Replay is implicit (recompute subsumes it); restart
-  resumes from the offsets stored in the sink.
+- :class:`runner.IncrementalRunner` — the one epoch loop: recompute
+  the view on the offset-bounded prefix of the log, diff against the
+  previous snapshot's parquet mirror, apply the net delta + offsets in
+  one transaction (``sinks/writer.write_snapshots``). Replay is
+  implicit (recompute subsumes it); restart resumes from the offsets
+  stored in the sink.
+- :class:`runner.IncrementalAggRunner` — the same loop and commit for a
+  grouped SUM, fed each epoch's O(churn) delta instead of a diff.
 - :mod:`structured` — the same contract driven by Structured Streaming:
   ``readStream → foreachBatch`` where each micro-batch is staged to the
-  log mirror (idempotently, keyed by batch_id), the view recomputed,
-  and the delta applied transactionally. Stateless flows can instead
-  stream append-mode with no diffing.
+  log mirror (idempotently, keyed by batch_id) and the staged log is
+  committed through one ``IncrementalRunner``. Stateless flows can
+  instead stream append-mode with no diffing.
 """
 
 from .runner import IncrementalRunner

@@ -20,7 +20,7 @@ Scale shape per batch (the part that must stay O(batch), not O(corpus)):
   between the two REPLAY-safe: a digest missing from the index lets a
   duplicate in on retry, a digest present without its row would drop
   data — so the index is committed only after its rows (same
-  mirror-pointer reasoning as streaming/runner.IncrementalAggRunner).
+  mirror-pointer reasoning as sinks/writer.write_snapshots).
 
 Used either directly (``CorpusIngestor.ingest_batch`` per epoch) or as
 the foreachBatch of a Structured Streaming file/Kafka source

@@ -4,10 +4,13 @@ Reference behavior transposed (/root/reference/src/runner.rs:151-358):
 events are consumed in lamport order; every ``events_per_txn`` events
 the accumulated deltas are shipped to the DB in one transaction with
 the offsets they reflect; on restart the stored offsets bound what to
-skip. Our epoch = one offset-bounded prefix of the log; instead of
-maintaining differential operator state we recompute the view on the
-prefix and diff against the previous snapshot's parquet mirror
-(distributed — sinks/writer.py). The reference's
+skip. Our epoch = one offset-bounded prefix of the log. One epoch
+loop (:class:`IncrementalRunner`: resume point, batch bounds, mirror)
+and one commit path (``sinks/writer.write_snapshots``) serve two ways
+of getting an epoch's delta: recompute the view on the prefix and diff
+against the previous snapshot's parquet mirror (distributed), or, in
+:class:`IncrementalAggRunner`, fold only the epoch's new events into a
+grouped SUM and hand that delta to the same commit. The reference's
 ``Stateless``/``Stateful`` marker (/root/reference/src/flow.rs:160-177)
 decides whether restart must replay history; recompute-from-log
 subsumes replay, and bounded look-back (``Flow::new_limited``,
@@ -29,6 +32,7 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..delta import delta_agg_next, delta_agg_sum, with_delta
 from ..sinks import DbapiSink, DbTable, Union
 from ..sinks.writer import SnapshotMirror, write_snapshots
 
@@ -134,11 +138,16 @@ class IncrementalRunner:
         """One epoch: recompute all views on the prefix ≤ upto, apply the
         net deltas + offsets in one transaction. Idempotent (retry ⇒
         empty diff). Returns total delta rows applied."""
-        bounded = self._bounded(events, upto)
+        return self.commit_prefix(self._bounded(events, upto), upto)
+
+    def commit_prefix(self, prefix: DataFrame, upto: int) -> int:
+        """One epoch over a frame that already is the log prefix ≤ upto
+        (the structured handler's staged log): no offset filter is added,
+        so the plan does not change from one epoch to the next."""
         applied = write_snapshots(
             self.spark,
             self.sink,
-            [(t, fn(bounded)) for t, fn in self.views],
+            [(t, fn(prefix)) for t, fn in self.views],
             {self.source_name: upto},
             self.mirror,
             offsets_table=self.spec.offsets_table,
@@ -156,22 +165,23 @@ class IncrementalRunner:
         return [self.run_batch(events, b) for b in bounds]
 
 
-class IncrementalAggRunner:
+class IncrementalAggRunner(IncrementalRunner):
     """Grouped-SUM view maintained by TRUE incremental aggregation —
-    the O(churn) alternative to :class:`IncrementalRunner`'s
-    recompute-and-diff for the (very common) algebraic-aggregate case.
+    the O(churn) kind of :class:`IncrementalRunner` for the (very
+    common) algebraic-aggregate case, where the base class recomputes
+    and diffs.
 
     Per epoch: only the NEW events (offset in (resume, upto]) are read,
     lifted to +1 deltas, and folded into the running aggregate with
     ``delta.delta_agg_sum`` — emitting the reference's retraction pairs
-    for exactly the touched keys — then applied with the offsets in one
-    transaction (``writer.write_delta`` shape). The running aggregate
-    lives in the parquet mirror; its pointer commits in the SAME
-    transaction, so crash/retry semantics match the snapshot path: an
-    epoch retried after a crash recomputes the identical delta
-    (deterministic inputs) and rewrites its own orphaned directory; a
-    committed epoch is never re-run, so the committed directory is never
-    written over.
+    for exactly the touched keys. The epoch commits through the same
+    ``write_snapshots`` as the base class, given that delta: it is
+    collected, the next aggregate (``delta.delta_agg_next``) is written
+    to the parquet mirror, and delta, offsets and mirror pointer commit
+    in one transaction. An epoch retried after a crash recomputes the
+    identical delta (deterministic inputs) and rewrites its own orphaned
+    directory; a committed epoch is never re-run. The mirror, resume
+    point and ``catch_up`` loop are the base class's.
 
     Scale: epoch cost is one churn-sized aggregate + one equi-join
     against the old aggregate's touched keys — independent of history
@@ -196,73 +206,38 @@ class IncrementalAggRunner:
         offset_col: str = "event_id",
         mirror_dir: str | None = None,
     ):
-        self.spark = spark
-        self.sink = sink
-        self.table = table
+        super().__init__(
+            spark, sink, table, prepare or (lambda df: df),
+            source_name=source_name, offset_col=offset_col, mirror_dir=mirror_dir,
+        )
         self.keys = list(keys)
         self.val_col = val_col
         self.out_col = out_col
-        self.prepare = prepare or (lambda df: df)
-        self.source_name = source_name
-        self.offset_col = offset_col
-        self.mirror = SnapshotMirror(
-            spark, mirror_dir or tempfile.mkdtemp(prefix="adf_aggmirror_")
-        )
-        sink.ensure(table)
-
-    def resume_offset(self) -> int:
-        return self.sink.read_offsets(self.table).get(self.source_name, -1)
-
-    def _agg_schema(self, prepared: DataFrame):
-        return (
-            prepared.limit(0)
-            .groupBy(*self.keys)
-            .agg(
-                F.sum(self.val_col).alias(self.out_col),
-                F.count(F.lit(1)).alias("_n"),
-            )
-            .schema
-        )
 
     def run_batch(self, events: DataFrame, upto: int) -> int:
         """One incremental epoch; returns applied delta-row count.
         Idempotent: a replayed (already-committed) epoch sees an empty
         pending set and applies nothing."""
-        from ..delta import delta_agg_next, delta_agg_sum, with_delta
-        from ..sinks.writer import deltas_to_rows
-
         start = self.resume_offset()
         if upto <= start:
             return 0
+        [(table, prepare)] = self.views
         pending = events.filter(
             (F.col(self.offset_col) > start) & (F.col(self.offset_col) <= upto)
         )
-        prepared = self.prepare(pending).select(*self.keys, self.val_col)
-        old_agg = self.mirror.read_previous(
-            self.sink, self.table, schema=self._agg_schema(prepared)
-        )
-        epoch = f"{self.source_name}-{upto}"
+        prepared = prepare(pending).select(*self.keys, self.val_col)
+        schema = prepared.groupBy(*self.keys).agg(
+            F.sum(self.val_col).alias(self.out_col), F.count(F.lit(1)).alias("_n")
+        ).schema
+        old_agg = self.mirror.read_previous(self.sink, table, schema=schema)
         # persisted: the collect and the fold share one evaluation
         agg_delta = delta_agg_sum(
             old_agg, with_delta(prepared), self.keys, self.val_col, self.out_col
         ).persist()
         try:
-            batch = deltas_to_rows(agg_delta, self.table)
-            self.mirror.write(self.table, delta_agg_next(old_agg, agg_delta), epoch)
+            return write_snapshots(
+                self.spark, self.sink, [(table, delta_agg_next(old_agg, agg_delta))],
+                {self.source_name: upto}, self.mirror, deltas={table.name: agg_delta},
+            )[table.name]
         finally:
             agg_delta.unpersist()
-        self.sink.advance_offsets(
-            {self.table: batch},
-            {self.source_name: upto},
-            mirror_epochs={self.table.name: epoch},
-        )
-        self.mirror.prune(self.table, epoch)
-        return len(batch)
-
-    def catch_up(self, events: DataFrame, events_per_txn: int = 1000) -> list[int]:
-        """Drain everything pending in ~``events_per_txn`` commit units
-        (same quantile-stride bounds as IncrementalRunner)."""
-        start = self.resume_offset()
-        pending = events.filter(F.col(self.offset_col) > start).select(self.offset_col)
-        bounds = batch_bounds(pending, self.offset_col, events_per_txn)
-        return [self.run_batch(events, b) for b in bounds]

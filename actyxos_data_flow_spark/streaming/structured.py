@@ -3,9 +3,10 @@ SQL materialization, in the reference's three phases.
 
 Micro-batch = the reference's epoch (/root/reference/src/machine.rs:169-181):
 each trigger stages its batch into the log mirror (idempotently, keyed
-by batch_id — a retried batch overwrites its own directory), recomputes
-the view(s) over the mirrored log, and applies the net delta + offsets
-in one sink transaction. This is the reference's offsets-in-transaction
+by batch_id — a retried batch overwrites its own directory) and hands
+the mirrored log, which is the prefix, to one :class:`~.runner.IncrementalRunner`:
+it recomputes the view(s) and applies the net delta + offsets in one
+sink transaction. This is the reference's offsets-in-transaction
 protocol (/root/reference/src/runner.rs:81-123) riding on Spark's
 replayable-source + idempotent-sink contract.
 
@@ -26,17 +27,14 @@ source we materialize it explicitly.
 from __future__ import annotations
 
 import os
-import tempfile
-from collections.abc import Callable, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..sinks import DbapiSink, DbTable, Union
-from ..sinks.writer import SnapshotMirror, write_snapshots
-
-ViewFn = Callable[[DataFrame], DataFrame]
+from ..sinks import DbapiSink, DbTable
+from .runner import IncrementalRunner, ViewFn
 
 
 def events_stream(
@@ -54,16 +52,18 @@ def events_stream(
     )
 
 
-def _foreach_batch_handler(
-    spark: SparkSession,
-    views: Sequence[tuple[DbTable, ViewFn]],
-    sink: DbapiSink,
-    stage_dir: str,
-    mirror: SnapshotMirror,
-    source_name: str,
-    offset_col: str,
-    offsets_table: str,
-):
+def _start(
+    spark, stream_df, view_fn, sink, table, stage_dir, checkpoint_dir,
+    source_name, offset_col, mirror_dir, **trigger,
+) -> StreamingQuery:
+    """Start ``readStream → foreachBatch`` on one :class:`IncrementalRunner`
+    under the given trigger."""
+    views = [(table, view_fn)] if table is not None else view_fn
+    runner = IncrementalRunner(
+        spark, sink, views=views, source_name=source_name,
+        offset_col=offset_col, mirror_dir=mirror_dir,
+    )
+
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         # idempotent stage: a retried batch rewrites its own directory
         batch_df.write.mode("overwrite").parquet(
@@ -76,29 +76,15 @@ def _foreach_batch_handler(
             # nothing to materialize, and upserting a NULL offset would
             # violate the offsets table's NOT NULL constraint
             return
-        write_snapshots(
-            spark,
-            sink,
-            [(t, fn(log)) for t, fn in views],
-            {source_name: upto},
-            mirror,
-            offsets_table=offsets_table,
-        )
+        # the staged log is the prefix ≤ upto already
+        runner.commit_prefix(log, upto)
 
-    return handle
-
-
-def _normalize_views(
-    view_fn: ViewFn | Sequence[tuple[DbTable, ViewFn]], table: DbTable | None
-) -> tuple[list[tuple[DbTable, ViewFn]], DbTable | Union]:
-    if table is not None:
-        views = [(table, view_fn)]
-    else:
-        views = list(view_fn)
-    spec: DbTable | Union = (
-        views[0][0] if len(views) == 1 else Union(tuple(t for t, _ in views))
+    return (
+        stream_df.writeStream.foreachBatch(handle)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(**trigger)
+        .start()
     )
-    return views, spec
 
 
 def run_available_now(
@@ -118,19 +104,10 @@ def run_available_now(
     per micro-batch. ``view_fn`` may be a single function (with
     ``table``) or a sequence of (table, view_fn) pairs sharing one
     transaction + offsets table (Union contract)."""
-    views, spec = _normalize_views(view_fn, table)
-    sink.ensure(spec)
-    mirror = SnapshotMirror(spark, mirror_dir or tempfile.mkdtemp(prefix="adf_mirror_"))
-    handle = _foreach_batch_handler(
-        spark, views, sink, stage_dir, mirror, source_name, offset_col, spec.offsets_table
-    )
-    q = (
-        stream_df.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _start(
+        spark, stream_df, view_fn, sink, table, stage_dir, checkpoint_dir,
+        source_name, offset_col, mirror_dir, availableNow=True,
+    ).awaitTermination()
 
 
 def run_live(
@@ -154,15 +131,7 @@ def run_live(
     loop also runs until torn down). Restart with the same checkpoint
     resumes from the last committed batch; the sink transaction makes
     replayed batches idempotent."""
-    views, spec = _normalize_views(view_fn, table)
-    sink.ensure(spec)
-    mirror = SnapshotMirror(spark, mirror_dir or tempfile.mkdtemp(prefix="adf_mirror_"))
-    handle = _foreach_batch_handler(
-        spark, views, sink, stage_dir, mirror, source_name, offset_col, spec.offsets_table
-    )
-    return (
-        stream_df.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=tick)
-        .start()
+    return _start(
+        spark, stream_df, view_fn, sink, table, stage_dir, checkpoint_dir,
+        source_name, offset_col, mirror_dir, processingTime=tick,
     )

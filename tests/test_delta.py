@@ -121,7 +121,8 @@ def test_delta_agg_sum_null_key(spark):
 def test_delta_agg_sum_retracts_null_sum_row(spark):
     """A group whose stored SUM is NULL (every value NULL) still has a
     row in the sink: touching it must retract that row, or the sink
-    keeps two rows for one key."""
+    keeps two rows for one key. And an epoch bringing only NULL values
+    keeps a non-NULL sum, as SQL SUM over all the rows does."""
     from actyxos_data_flow_spark.delta import delta_agg_next, delta_agg_sum
 
     old = spark.createDataFrame([("a", None, 1), ("b", 4, 1)], "k string, total long, _n long")
@@ -132,3 +133,7 @@ def test_delta_agg_sum_retracts_null_sum_row(spark):
         ("a", 5, 2),
         ("b", 4, 1),
     ]
+    old = spark.createDataFrame([("a", 5, 1)], "k string, total long, _n long")
+    delta = spark.createDataFrame([("a", None, 1)], "k string, val long, delta long")
+    d = delta_agg_sum(old, delta, ["k"], "val", "total")
+    assert {tuple(r) for r in d.collect()} == {("a", 5, 1, -1), ("a", 5, 2, 1)}

@@ -1,8 +1,9 @@
-"""Per-epoch contract of both incremental runners at the mirror write
-point: a crash between the mirror write and the sink commit leaves the
-committed state intact and the retry lands exactly where a crash-free
-run does; and each epoch evaluates its view (recompute runner) or its
-prepared input (aggregate runner) once.
+"""Per-epoch contract of both incremental runners: a crash at the
+mirror write or at the sink commit leaves the committed state intact
+and the retry lands exactly where a crash-free run does; each epoch
+evaluates its view (recompute runner) or its prepared input (aggregate
+runner) once; and over random logs and epoch cuts both runners' sink
+rows equal the view over the whole log.
 """
 
 from __future__ import annotations
@@ -11,6 +12,8 @@ import os
 
 import pyspark.sql.functions as F
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 
 from actyxos_data_flow_spark.sinks import DbColumn, DbTable, SqliteSink
 from actyxos_data_flow_spark.streaming import IncrementalRunner
@@ -49,9 +52,26 @@ def make_runner(kind, spark, sink, mirror_dir, key=None):
     )
 
 
-@pytest.mark.parametrize("retry_upto", [39, 59], ids=["same_epoch", "later_epoch"])
+# where the first attempt of the second epoch dies, and the mirror
+# directories it leaves: inside the sink commit, after the new snapshot
+# is written, or inside SnapshotMirror.write, before it writes (the
+# aggregate runner has collected its delta by then)
+CRASH_POINTS = {"commit": ["events-19", "events-39"], "mirror_write": ["events-19"]}
+
+
+@pytest.mark.parametrize(
+    ("retry_upto", "crash_at"),
+    [
+        pytest.param(39, "commit", id="same_epoch"),
+        pytest.param(59, "commit", id="later_epoch"),
+        pytest.param(39, "mirror_write", id="same_epoch-in_mirror_write"),
+        pytest.param(59, "mirror_write", id="later_epoch-in_mirror_write"),
+    ],
+)
 @pytest.mark.parametrize("kind", RUNNERS)
-def test_crash_after_mirror_write_then_retry(spark, events, tmp_path, monkeypatch, kind, retry_upto):
+def test_crash_after_mirror_write_then_retry(
+    spark, events, tmp_path, monkeypatch, kind, retry_upto, crash_at
+):
     clean = SqliteSink(str(tmp_path / "clean.db"))
     runner = make_runner(kind, spark, clean, str(tmp_path / "clean-mirror"))
     runner.run_batch(events, 19)
@@ -65,20 +85,21 @@ def test_crash_after_mirror_write_then_retry(spark, events, tmp_path, monkeypatc
     runner = make_runner(kind, spark, sink, mirror_dir)
     runner.run_batch(events, 19)
 
-    commit, calls = sink.advance_offsets, []
+    owner, attr = (runner.mirror, "write") if crash_at == "mirror_write" else (sink, "advance_offsets")
+    real, calls = getattr(owner, attr), []
 
     def crash_once(*args, **kwargs):
         calls.append(1)
         if len(calls) == 1:
-            raise RuntimeError("crash between the mirror write and the commit")
-        return commit(*args, **kwargs)
+            raise RuntimeError(f"crash inside {attr}")
+        return real(*args, **kwargs)
 
-    monkeypatch.setattr(sink, "advance_offsets", crash_once)
+    monkeypatch.setattr(owner, attr, crash_once)
     with pytest.raises(RuntimeError):
         runner.run_batch(events, 39)
-    # the crash came after the mirror write; the committed side is intact
+    # the committed side is intact
     assert sink.mirror_epoch(TABLE.name) == "events-19"
-    assert sorted(os.listdir(table_dir)) == ["events-19", "events-39"]
+    assert sorted(os.listdir(table_dir)) == CRASH_POINTS[crash_at]
     assert sink.read_offsets(TABLE) == {"events": 19}
 
     assert runner.run_batch(events, retry_upto) > 0
@@ -117,4 +138,27 @@ def test_each_epoch_evaluates_its_input_once(spark, events, tmp_path, kind):
     assert sorted(sink.rows(TABLE)) == sorted(
         tuple(r) for r in totals(events.filter(F.col("event_id") <= 39)).collect()
     )
+    sink.close()
+
+
+@settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@example(vals=[5, None], nkeys=1, cuts=[0])
+@given(
+    vals=st.lists(st.none() | st.integers(-20, 20), min_size=1, max_size=12),
+    nkeys=st.integers(1, 3),
+    cuts=st.lists(st.integers(0, 11), max_size=3),
+)
+@pytest.mark.parametrize("kind", RUNNERS)
+def test_runners_equal_totals_over_random_epochs(spark, tmp_path_factory, kind, vals, nkeys, cuts):
+    """Whatever the values (NULL included) and wherever the epochs are
+    cut, the sink ends on ``totals`` over the whole log. The pinned
+    example is an epoch that brings only a NULL to a non-NULL sum."""
+    events = spark.createDataFrame(
+        [(i, f"k{i % nkeys}", v) for i, v in enumerate(vals)], "event_id long, k string, v long"
+    )
+    sink = SqliteSink(":memory:")
+    runner = make_runner(kind, spark, sink, str(tmp_path_factory.mktemp("mirror")))
+    for upto in sorted({c for c in cuts if c < len(vals)} | {len(vals) - 1}):
+        runner.run_batch(events, upto)
+    assert sorted(sink.rows(TABLE)) == sorted(tuple(r) for r in totals(events).collect())
     sink.close()

@@ -230,17 +230,17 @@ def test_snapshot_diff_matches_sink_apply(spark):
     assert d == {("a", 1): -1, ("c", 3): 1}
 
 
-def test_write_delta_incremental_agg_epoch(spark):
-    """True-IVM lifecycle: epoch 1 seeds a grouped-sum view; epoch 2
-    applies ONLY the delta_agg_sum retraction pairs (no recompute, no
-    mirror) — the stored table must land exactly on the recomputed
-    aggregate, offsets advancing in the same transaction."""
-    import pyspark.sql.functions as F
-
-    from actyxos_data_flow_spark.delta import delta_agg_sum, with_delta
+def test_write_delta_incremental_agg_epoch(spark, tmp_path):
+    """True-IVM lifecycle through ``write_snapshots(..., deltas=...)``:
+    epoch 1 seeds a grouped-sum view; epoch 2 ships ONLY the given
+    delta_agg_sum retraction pairs (no recompute, no mirror diff) — the
+    stored table must land exactly on the recomputed aggregate, offsets
+    and the pointer to the folded snapshot advancing in the same
+    transaction."""
+    from actyxos_data_flow_spark.delta import delta_agg_next, delta_agg_sum, with_delta
     from actyxos_data_flow_spark.sinks.sqlite import SqliteSink
     from actyxos_data_flow_spark.sinks.spec import DbColumn, DbTable
-    from actyxos_data_flow_spark.sinks.writer import write_delta
+    from actyxos_data_flow_spark.sinks.writer import SnapshotMirror, write_snapshots
 
     agg_table = DbTable(
         "agg_totals",
@@ -249,19 +249,31 @@ def test_write_delta_incremental_agg_epoch(spark):
     )
     s = SqliteSink(":memory:")
     s.ensure(agg_table)
+    mirror = SnapshotMirror(spark, str(tmp_path / "mirror"))
+
+    def epoch(snapshot, delta, offsets):
+        return write_snapshots(
+            spark, s, [(agg_table, snapshot)], offsets, mirror, deltas={agg_table.name: delta}
+        )[agg_table.name]
 
     src_old = spark.createDataFrame([("a", 10), ("a", 5), ("b", 7)], "g string, v long")
     old_agg = src_old.groupBy("g").agg(F.sum("v").alias("total"), F.count("*").alias("_n"))
-    n = write_delta(spark, s, agg_table, with_delta(old_agg), {"src": 1})
+    n = epoch(old_agg, with_delta(old_agg), {"src": 1})
     assert n == 2 and sorted(s.rows(agg_table)) == [("a", 15, 2), ("b", 7, 1)]
 
     d = spark.createDataFrame(
         [("a", 3, 1), ("b", 7, -1), ("c", 4, 1)], "g string, v long, delta long"
     )
     agg_delta = delta_agg_sum(old_agg, d, ["g"], "v", "total")
-    n = write_delta(spark, s, agg_table, agg_delta, {"src": 2})
+    n = epoch(delta_agg_next(old_agg, agg_delta), agg_delta, {"src": 2})
     # a updated (retract+insert), b emptied (retract), c new (insert)
     assert n == 4
     assert sorted(s.rows(agg_table)) == [("a", 18, 3), ("c", 4, 1)]
     assert s.read_offsets(agg_table) == {"src": 2}
+    # the pointer names the directory just written, which holds the
+    # folded snapshot the sink's rows reflect
+    assert s.mirror_epoch(agg_table.name) == "src-2"
+    assert os.listdir(tmp_path / "mirror" / agg_table.name) == ["src-2"]
+    written = mirror.read(agg_table, "src-2", old_agg.schema).collect()
+    assert sorted(tuple(r) for r in written) == [("a", 18, 3), ("c", 4, 1)]
     s.close()
