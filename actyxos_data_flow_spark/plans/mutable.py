@@ -221,17 +221,7 @@ def mutable_corpus_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     ing.upsert_batch(batch4)
-    raw = spark.read.parquet(ing.docs_path)
-    view = ing._visible(raw, "doc_id").select(
-        "doc_id",
-        F.md5(F.col("text").cast("binary")).alias("digest"),
-        F.col("_seq").alias("seq"),
-    )
-    labels = ing.clusters().select(F.col("node").alias("doc_id"), "component")
-    out = view.join(labels, "doc_id", "full_outer").select(
-        "doc_id", "digest", "seq", "component"
-    )
-    return out.localCheckpoint()
+    return _corpus_view(ing)
 
 
 @register("mutable_corpus_compact_replay", oracle=MUTABLE_REPLAY_ORACLE)
@@ -261,26 +251,15 @@ def mutable_corpus_compact_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     ing.upsert_batch(batch4)
     ing.compact()
     # post-compaction read: the raw store IS the visible view (the
-    # _visible filter stays in the path to prove it is now a no-op)
-    raw = spark.read.parquet(ing.docs_path)
-    view = ing._visible(raw, "doc_id").select(
-        "doc_id",
-        F.md5(F.col("text").cast("binary")).alias("digest"),
-        F.col("_seq").alias("seq"),
-    )
-    labels = ing.clusters().select(F.col("node").alias("doc_id"), "component")
-    out = view.join(labels, "doc_id", "full_outer").select(
-        "doc_id", "digest", "seq", "component"
-    )
-    return out.localCheckpoint()
+    # tombstone filter stays in the reader to prove it is now a no-op)
+    return _corpus_view(ing)
 
 
-def _corpus_view(spark: SparkSession, ing) -> DataFrame:
+def _corpus_view(ing) -> DataFrame:
     """(doc_id, digest, seq, component): the visible corpus view
     full-outer-joined with the committed cluster labeling — the shared
     hashed output of every lifecycle-replay row."""
-    raw = spark.read.parquet(ing.docs_path)
-    view = ing._visible(raw, "doc_id").select(
+    view = ing._read("docs").select(
         "doc_id",
         F.md5(F.col("text").cast("binary")).alias("digest"),
         F.col("_seq").alias("seq"),
@@ -349,4 +328,4 @@ def cdc_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     ing = MutableCorpusIngestor(
         spark, os.path.join(base, "corpus"), quality_min_fp6=QUALITY_MIN_FP6, near_dup=True
     )
-    return _corpus_view(spark, ing)
+    return _corpus_view(ing)

@@ -191,12 +191,11 @@ SELECT vec_id, hsig, CAST(3 AS BIGINT) AS seq FROM accsig4
 """
 
 
-def _final_view(spark: SparkSession, ing) -> DataFrame:
+def _final_view(ing) -> DataFrame:
     """Visible (vec_id, hsig, seq) — the hashed end state (signature
     strings + sequence stamps; embeddings stay pass-through doubles and
     never enter the hash)."""
-    raw = ing._read_or_empty(ing.hsigs_path, "vec_id long, hsig string, _seq long")
-    out = ing._visible(raw, "vec_id").select("vec_id", "hsig", F.col("_seq").alias("seq"))
+    out = ing._read("hsigs").select("vec_id", "hsig", F.col("_seq").alias("seq"))
     return out.localCheckpoint()
 
 
@@ -231,7 +230,7 @@ def mutable_vectors_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     ing.upsert_batch(b2)
     ing.retract_batch(dels)
     ing.upsert_batch(ups3)
-    return _final_view(spark, ing)
+    return _final_view(ing)
 
 
 @register("cdc_vector_replay", oracle=VECTOR_REPLAY_ORACLE)
@@ -282,4 +281,4 @@ def cdc_vector_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_bands=VBANDS,
         cosine_threshold=VCOS_THRESHOLD,
     )
-    return _final_view(spark, ing)
+    return _final_view(ing)

@@ -1,7 +1,7 @@
 """Continuous corpus ingestion: the training-data pipeline's streaming
 front door. Each micro-batch of raw documents is quality-gated,
 deduplicated WITHIN the batch, deduplicated AGAINST everything already
-ingested, and appended to a parquet corpus — so the corpus is
+ingested, and committed to a parquet corpus — so the corpus is
 exact-dedup-clean at every commit point.
 
 Scale shape per batch (the part that must stay O(batch), not O(corpus)):
@@ -15,12 +15,13 @@ Scale shape per batch (the part that must stay O(batch), not O(corpus)):
   table (``df.write.bucketBy(n, "digest").sortBy("digest")
   .saveAsTable(...)``) so the probe's shuffle disappears on the index
   side and only the batch exchanges;
-- accepted rows append to the corpus in one write, their digests to the
-  index in a second. Ordering (corpus first, index last) makes a crash
-  between the two REPLAY-safe: a digest missing from the index lets a
-  duplicate in on retry, a digest present without its row would drop
-  data — so the index is committed only after its rows (same
-  mirror-pointer reasoning as sinks/writer.write_snapshots).
+- the accepted rows, their digests, signatures, postings and sketch
+  partials each land in a batch-keyed directory of their store, and one
+  pointer swap commits them together (:class:`BatchStores`, the same
+  never-overwrite-the-committed rule as sinks/writer.write_snapshots).
+  A crash at any write point leaves every reader on the previous batch,
+  and a replay of the batch overwrites its own directories, so no write
+  order has to be argued for.
 
 Used either directly (``CorpusIngestor.ingest_batch`` per epoch) or as
 the foreachBatch of a Structured Streaming file/Kafka source
@@ -28,20 +29,160 @@ the foreachBatch of a Structured Streaming file/Kafka source
 
 Reference parity: this is the reference's ingest-dedupe-materialize
 lifecycle (src/runner.rs replay/catch-up/live) instantiated for a
-document corpus instead of a SQL mirror.
+document corpus instead of a SQL mirror, with its exactly-once commit
+(src/runner.rs:81-123) as the pointer swap.
 """
 
 from __future__ import annotations
 
+import copy
+import json
 import os
+import shutil
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..operators import dedup as D
 from ..operators import text as X
 
 DIGEST_SCHEMA = "digest string, doc_id long"
+POINTER = "_COMMITTED"
+
+
+class BatchStores:
+    """The ingest stores' one commit protocol. Every store is a
+    directory of batch directories ``<store>/_b=<n>``; the pointer file
+    ``<root>/_COMMITTED`` holds the last committed batch number, the
+    mutable gates' sequence ``seq``, and per store the live batches and
+    the schema they were written with.
+
+    - write (:meth:`write`): batch n+1 writes each store to
+      ``<store>/_b=<n+1>`` with overwrite — a directory no committed
+      pointer names;
+    - commit (:meth:`batch`): one ``os.replace`` of the pointer makes
+      every write of the batch visible at once; directories the new
+      pointer does not name are then pruned (best-effort: the pointer
+      has already moved);
+    - read (:meth:`read`): only committed batches, always under the
+      recorded schema.
+
+    A crash before the swap leaves readers on batch n, and a replay of
+    the same call reads that same state, so it recomputes the same rows
+    and overwrites its own directories: every store is exactly-once at
+    every write point. A ``replace`` write (the cluster labeling, every
+    store in ``compact()``) makes its batch the store's only live one —
+    the newest committed labeling wins."""
+
+    def __init__(self, spark: SparkSession, root: str, schemas: dict[str, str]) -> None:
+        self.spark = spark
+        self.root = root
+        self.schemas = schemas  # declared schema of each store, used while it is empty
+        self.seq = 0
+        self._next: dict | None = None
+
+    def path(self, store: str) -> str:
+        return os.path.join(self.root, store)
+
+    def committed(self) -> dict:
+        try:
+            with open(os.path.join(self.root, POINTER)) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return {"batch": 0, "seq": 0, "stores": {}}
+
+    @contextmanager
+    def batch(self, seq_step: int = 0):
+        """One batch: the writes inside the block commit together when
+        it exits normally, and an exception commits nothing.
+        ``seq_step=1`` advances ``seq`` (an ingest); 0 keeps it (a
+        retraction, a compaction). A batch that writes nothing and keeps
+        ``seq`` commits nothing."""
+        old = self.committed()
+        nxt = copy.deepcopy(old)
+        nxt["batch"] += 1
+        nxt["seq"] += seq_step
+        self.seq = nxt["seq"]
+        self._next = nxt
+        try:
+            yield
+        finally:
+            self._next = None
+        if nxt["stores"] == old["stores"] and nxt["seq"] == old["seq"]:
+            return
+        os.makedirs(self.root, exist_ok=True)
+        tmp = os.path.join(self.root, POINTER + ".tmp")
+        with open(tmp, "w") as f:
+            json.dump(nxt, f)
+        os.replace(tmp, os.path.join(self.root, POINTER))
+        for store in set(old["stores"]) | set(nxt["stores"]):
+            live = {f"_b={b}" for b in nxt["stores"].get(store, {}).get("batches", [])}
+            path = self.path(store)
+            dead = set(os.listdir(path)) - live if live and os.path.isdir(path) else ()
+            for d in dead:
+                shutil.rmtree(os.path.join(path, d), ignore_errors=True)
+            if not live:
+                shutil.rmtree(path, ignore_errors=True)
+
+    def write(self, store: str, df: DataFrame, replace: bool = False) -> None:
+        """The one store write: ``df`` to the open batch's directory of
+        ``store``. ``replace`` makes it the store's only live batch."""
+        b = self._next["batch"]
+        df.write.mode("overwrite").parquet(os.path.join(self.path(store), f"_b={b}"))
+        entry = self._next["stores"].setdefault(store, {"batches": []})
+        entry["batches"] = [b] if replace else entry["batches"] + [b]
+        if replace:
+            entry["base"] = b
+        entry["schema"] = df.schema.jsonValue()
+
+    def clear(self, store: str) -> None:
+        """Drop every batch of ``store`` when the open batch commits."""
+        self._next["stores"].pop(store, None)
+
+    def read(self, store: str, upto: int | None = None) -> DataFrame:
+        """The committed batches of ``store`` (those up to batch
+        ``upto`` if given), under the schema they were written with; an
+        empty frame of the declared schema while none is committed. An
+        empty or absent store is an empty frame, never an error, but a
+        corrupt batch still raises on scan — treating it as empty would
+        switch the gate off and let duplicates in.
+
+        Passing the schema spares the parquet schema-inference job, so
+        building the frame starts no Spark job while the store has at
+        most 32 live batch directories. Above that
+        (``spark.sql.sources.parallelPartitionDiscovery.threshold``)
+        Spark lists the directories in parallel, one job per read;
+        ``compact()`` folds a store's directories back into one."""
+        entry = self.committed()["stores"].get(store)
+        if entry is None:
+            return self.spark.createDataFrame([], self.schemas[store])
+        if upto is not None and upto < entry.get("base", 0):
+            raise ValueError(f"{store}: batch {upto} was folded into batch {entry['base']}")
+        schema = StructType.fromJson(entry["schema"])
+        dirs = [
+            os.path.join(self.path(store), f"_b={b}")
+            for b in entry["batches"]
+            if upto is None or b <= upto
+        ]
+        if not dirs:
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(*dirs)
+
+
+class _Stored:
+    """What both ingest gates share: one :class:`BatchStores` and the
+    read/write hooks the mutable gates override (tombstone visibility
+    on reads, the ``_seq`` stamp on writes)."""
+
+    _SEQ_STEP = 0
+
+    def _read(self, store: str, upto: int | None = None) -> DataFrame:
+        return self._stores.read(store, upto)
+
+    def _write(self, store: str, df: DataFrame) -> None:
+        self._stores.write(store, df)
 
 
 def _cosine_ge(ea, eb, threshold: float):
@@ -95,7 +236,7 @@ def _directed_drops(near: DataFrame, batch_ids: DataFrame, id_col: str) -> DataF
     )
 
 
-class CorpusIngestor:
+class CorpusIngestor(_Stored):
     def __init__(
         self,
         spark: SparkSession,
@@ -109,23 +250,28 @@ class CorpusIngestor:
         sim_threshold: float = 0.5,
         postings: bool = False,
         positional: bool = False,
-        epochs: bool = False,
     ) -> None:
         self.spark = spark
-        self.docs_path = os.path.join(corpus_dir, "docs")
-        self.index_path = os.path.join(corpus_dir, "digests")
-        self.sigs_path = os.path.join(corpus_dir, "sigs")
-        self.clusters_path = os.path.join(corpus_dir, "clusters")
+        hs = ", ".join(f"h{s} long" for s in range(num_hashes))
+        self._stores = BatchStores(
+            spark,
+            corpus_dir,
+            {
+                "docs": f"{id_col} long, {text_col} string",
+                "digests": DIGEST_SCHEMA,
+                "sigs": f"{id_col} long, {hs}",
+                "clusters": "node long, component long",
+                "postings": f"term string, {id_col} long, tf long",
+                "doclens": f"{id_col} long, dl int",
+                "cms": "row int, bucket long, c long",
+                "hll": "idx long, r int",
+                "hdr": "bid long, c long",
+                "positions": f"{id_col} long, term string, pos int",
+            },
+        )
+        self.docs_path = self._stores.path("docs")
         self.postings_flag = postings
-        self.postings_path = os.path.join(corpus_dir, "postings")
-        self.doclen_path = os.path.join(corpus_dir, "doclens")
-        self.cms_path = os.path.join(corpus_dir, "cms")
-        self.hll_path = os.path.join(corpus_dir, "hll")
-        self.hdr_path = os.path.join(corpus_dir, "hdr")
         self.positional_flag = positional
-        self.positions_path = os.path.join(corpus_dir, "positions")
-        self.epochs_flag = epochs
-        self.epoch_file = os.path.join(corpus_dir, "_EPOCH")
         self.quality_min_fp6 = quality_min_fp6
         self.id_col = id_col
         self.text_col = text_col
@@ -134,29 +280,11 @@ class CorpusIngestor:
         self.band_size = band_size
         self.sim_threshold = sim_threshold
 
-    def _read_or_empty(self, path: str, schema: str) -> DataFrame:
-        """Empty frame ONLY for a genuinely absent/empty index. A
-        corrupt or unreadable index must raise: silently treating it as
-        empty would disable dedup for the batch and pollute the corpus
-        with re-ingested duplicates."""
-        if os.path.isdir(path):
-            import glob
-
-            if glob.glob(os.path.join(path, "*.parquet")) or glob.glob(
-                os.path.join(path, "part-*")
-            ):
-                return self.spark.read.parquet(path)
-        return self.spark.createDataFrame([], schema)
-
     def _index(self) -> DataFrame:
-        return self._read_or_empty(self.index_path, DIGEST_SCHEMA)
-
-    def _sig_schema(self) -> str:
-        hs = ", ".join(f"h{s} long" for s in range(self.num_hashes))
-        return f"{self.id_col} long, {hs}"
+        return self._read("digests").select("digest", "doc_id")
 
     def _sigs(self) -> DataFrame:
-        return self._read_or_empty(self.sigs_path, self._sig_schema())
+        return self._read("sigs").drop("_seq")
 
     # -- incremental cluster labels (near_dup mode) ---------------------
     #
@@ -164,68 +292,31 @@ class CorpusIngestor:
     # the near-dup stage — including REJECTED near-dups, whose label is
     # their provenance ("this arrival belongs to cluster X"); exact-dup
     # arrivals never reach it (their cluster is their digest-twin's).
-    # Merges can relabel HISTORIC nodes, so each batch commits a full
-    # new labeling. Crash safety uses the mirror-pointer pattern
-    # (sinks/writer.py): labels land in an epoch directory keyed by the
-    # batch fingerprint, then a pointer file swaps atomically
-    # (os.replace) — a crash mid-write leaves the pointer on the old,
-    # complete epoch; a replayed batch maps to the same epoch directory
-    # and overwrites it. At corpus scale this table is two longs per
-    # ingested doc — doc-count-sized metadata, not corpus-sized data.
-
-    def _clusters_current(self) -> str | None:
-        try:
-            with open(os.path.join(self.clusters_path, "_CURRENT")) as f:
-                return f.read().strip() or None
-        except FileNotFoundError:
-            return None
+    # Merges can relabel HISTORIC nodes, so each batch writes a full new
+    # labeling as a replace write of the batch: it commits with the
+    # batch's other stores, and the newest committed labeling wins. At
+    # corpus scale this table is two longs per ingested doc —
+    # doc-count-sized metadata, not corpus-sized data.
 
     def clusters(self) -> DataFrame:
         """The committed (node, component) labeling."""
-        epoch = self._clusters_current()
-        if epoch is None:
-            return self.spark.createDataFrame([], "node long, component long")
-        return self.spark.read.parquet(os.path.join(self.clusters_path, epoch))
+        return self._read("clusters")
 
-    def _commit_clusters(self, labels: DataFrame, epoch: str) -> None:
-        target = os.path.join(self.clusters_path, epoch)
-        labels.write.mode("overwrite").parquet(target)
-        os.makedirs(self.clusters_path, exist_ok=True)
-        tmp = os.path.join(self.clusters_path, "_CURRENT.tmp")
-        with open(tmp, "w") as f:
-            f.write(epoch)
-        os.replace(tmp, os.path.join(self.clusters_path, "_CURRENT"))
-        # prune superseded epochs (best-effort; pointer already moved)
-        import shutil
-
-        for d in os.listdir(self.clusters_path):
-            if d not in (epoch, "_CURRENT") and not d.startswith("_CURRENT"):
-                shutil.rmtree(os.path.join(self.clusters_path, d), ignore_errors=True)
-
-    def _maintain_clusters(self, batch_nodes: DataFrame, near_pairs: DataFrame) -> str:
+    def _maintain_clusters(self, batch_nodes: DataFrame, near_pairs: DataFrame) -> None:
         """Fold this batch's verified near-dup edges into the standing
         labeling (operators.dedup.connected_components_delta — prior
         labels enter as depth-1 star edges, so only delta chains need
         contracting). Batch docs with no partner enter as self-pairs and
-        come out singletons. Returns the committed epoch key."""
+        come out singletons."""
         from ..operators.dedup import connected_components_delta
 
         ids = batch_nodes.select(F.col(self.id_col).cast("long").alias("_id"))
-        fp = ids.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.min("_id"), F.lit(0)).alias("lo"),
-            F.coalesce(F.max("_id"), F.lit(0)).alias("hi"),
-            F.coalesce(F.sum("_id"), F.lit(0)).alias("s"),
-        ).first()
-        epoch = f"n{fp['n']}_lo{fp['lo']}_hi{fp['hi']}_s{fp['s']}"
         selfs = ids.select(F.col("_id").alias("id_a"), F.col("_id").alias("id_b"))
         edges = near_pairs.select("id_a", "id_b").unionByName(selfs)
         new_labels = connected_components_delta(self.clusters(), edges)
-        # localCheckpoint: materialize BEFORE the write so the plan no
-        # longer references the previous epoch's files (and CC's
-        # iterative lineage is cut); checkpoint() on a real cluster
-        self._commit_clusters(new_labels.localCheckpoint(), epoch)
-        return epoch
+        # localCheckpoint cuts CC's iterative lineage before the write;
+        # checkpoint() on a real cluster
+        self._stores.write("clusters", new_labels.localCheckpoint(), replace=True)
 
     def _near_dup_gate(self, fresh: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
         """MinHash-LSH near-dup gate for one ingest batch: signatures of
@@ -243,18 +334,16 @@ class CorpusIngestor:
 
         Materialization discipline (the round-12 wall-clock fix): the
         batch signatures are checkpointed ONCE — the band probe, BOTH
-        sides of the estimator join, and the signature append all read
+        sides of the estimator join, and the signature write all read
         the same computed rows (lazily, minhash ran once per consumer:
         3×+ per batch) — and the verified pair set is checkpointed
         before anything derives from it, because drops/accepted/
         accepted_sigs/cluster-maintenance each re-ran the whole
         estimator join when ``near`` stayed lazy. Checkpointing near
-        here also pins the edge set as of the PRE-APPEND signature
-        index (cluster maintenance runs after this batch's sigs land —
-        a lazy plan would see the batch's own rows in the index). Both
-        frames are model-sized: O(batch) signatures, verified pairs.
-        At cluster scale swap localCheckpoint for reliable
-        checkpoint()."""
+        also pins the edge set against later commits to the signature
+        index. Both frames are model-sized: O(batch) signatures,
+        verified pairs. At cluster scale swap localCheckpoint for
+        reliable checkpoint()."""
         sig_new = D.minhash_signatures_arrays(
             D.shingle_arrays(fresh, self.id_col, self.text_col),
             self.id_col,
@@ -281,178 +370,117 @@ class CorpusIngestor:
         return accepted, sig_new.join(drops, self.id_col, "left_anti"), near
 
     def ingest_batch(self, docs: DataFrame) -> dict:
-        """Gate, dedup (intra-batch then vs history), append. Returns
-        counts {'arrived', 'gated', 'accepted'} for observability."""
-        scored = X.quality_score(docs, self.id_col, self.text_col).select(
-            self.id_col, "quality_fp6"
-        )
-        # quality_score is a pure projection (one row per doc), so the
-        # arrived and gated counts come from ONE aggregate over the
-        # scored batch instead of two separate scans
-        _counts = scored.agg(
-            F.count(F.lit(1)).alias("_arrived"),
-            F.sum(
-                (F.col("quality_fp6") >= self.quality_min_fp6).cast("long")
-            ).alias("_gated"),
-        ).first()
-        arrived, n_gated = _counts["_arrived"], int(_counts["_gated"] or 0)
-        gated = docs.join(
-            scored.filter(F.col("quality_fp6") >= self.quality_min_fp6), self.id_col
-        )
-        with_digest = gated.withColumn(
-            "digest", F.md5(F.col(self.text_col).cast("binary"))
-        )
-        # intra-batch dedup: keep the whole smallest-id row per digest
-        # (hash aggregate — no window sort)
-        rec = F.struct(*[F.col(c) for c in with_digest.columns])
-        in_batch = (
-            with_digest.groupBy("digest")
-            .agg(F.min_by(rec, F.col(self.id_col)).alias("_rec"))
-            .select("_rec.*")
-        )
-        # cross-history dedup: anti-join on the digest index only
-        fresh = in_batch.join(self._index(), "digest", "left_anti")
-        sigs = None
-        near = None
-        pre_gate = None
-        if self.near_dup:
-            pre_gate = fresh.persist()  # nodes entering the near-dup stage
-            # the gate checkpoints the batch signatures and the verified
-            # pair set internally (see _near_dup_gate) — sigs/near are
-            # cheap model-sized reads from here on
-            fresh, sigs, near = self._near_dup_gate(pre_gate)
-        # Write order = corpus → signatures → clusters → digest index.
-        # The digest index is the ADMISSION GATE (the anti-join), so it
-        # commits LAST: a crash anywhere earlier re-admits the batch on
-        # replay (at-least-once duplicates, recoverable) — whereas
-        # committing the digest before the sigs/clusters would gate the
-        # docs out forever with their signatures permanently missing
-        # from the near-dup index (silent recall loss, unrecoverable).
-        # Cluster maintenance runs even when accepted == 0: a batch of
-        # pure near-dup rejects still merges its arrivals' labels.
-        out = fresh.persist()
-        try:
-            accepted = out.count()
-            if accepted:
-                if self.epochs_flag:
-                    # epoch-partitioned layout => TIME TRAVEL: corpus
-                    # state as of any batch is a partition-pruned read
-                    # (_epoch <= n), the lakehouse snapshot pattern with
-                    # plain parquet. The counter bumps AFTER the write:
-                    # a crash between them replays the batch into the
-                    # SAME epoch directory (at-least-once, consistent
-                    # with the admission-gate posture).
-                    seq = self.current_epoch() + 1
-                    (
-                        out.drop("digest")
-                        .withColumn("_epoch", F.lit(seq))
-                        .write.mode("append")
-                        .partitionBy("_epoch")
-                        .parquet(self.docs_path)
+        """Gate, dedup (intra-batch then vs history), commit. Returns
+        counts {'arrived', 'gated', 'accepted'} for observability. Every
+        store the batch writes commits in one pointer swap, so a replay
+        after a crash at any write point lands the batch exactly once."""
+        with self._stores.batch(self._SEQ_STEP):
+            scored = X.quality_score(docs, self.id_col, self.text_col).select(
+                self.id_col, "quality_fp6"
+            )
+            # quality_score is a pure projection (one row per doc), so the
+            # arrived and gated counts come from ONE aggregate over the
+            # scored batch instead of two separate scans
+            _counts = scored.agg(
+                F.count(F.lit(1)).alias("_arrived"),
+                F.sum(
+                    (F.col("quality_fp6") >= self.quality_min_fp6).cast("long")
+                ).alias("_gated"),
+            ).first()
+            arrived, n_gated = _counts["_arrived"], int(_counts["_gated"] or 0)
+            gated = docs.join(
+                scored.filter(F.col("quality_fp6") >= self.quality_min_fp6), self.id_col
+            )
+            with_digest = gated.withColumn(
+                "digest", F.md5(F.col(self.text_col).cast("binary"))
+            )
+            # intra-batch dedup: keep the whole smallest-id row per digest
+            # (hash aggregate — no window sort)
+            rec = F.struct(*[F.col(c) for c in with_digest.columns])
+            in_batch = (
+                with_digest.groupBy("digest")
+                .agg(F.min_by(rec, F.col(self.id_col)).alias("_rec"))
+                .select("_rec.*")
+            )
+            # cross-history dedup: anti-join on the digest index only
+            fresh = in_batch.join(self._index(), "digest", "left_anti")
+            sigs = None
+            near = None
+            pre_gate = None
+            if self.near_dup:
+                pre_gate = fresh.persist()  # nodes entering the near-dup stage
+                # the gate checkpoints the batch signatures and the verified
+                # pair set internally (see _near_dup_gate) — sigs/near are
+                # cheap model-sized reads from here on
+                fresh, sigs, near = self._near_dup_gate(pre_gate)
+            # Cluster maintenance runs even when accepted == 0: a batch of
+            # pure near-dup rejects still merges its arrivals' labels.
+            out = fresh.persist()
+            try:
+                accepted = out.count()
+                if accepted:
+                    self._write("docs", out.drop("digest"))
+                    if sigs is not None:
+                        self._write("sigs", sigs)
+                    if self.postings_flag:
+                        self._write_postings(out.drop("digest"))
+                    self._write(
+                        "digests",
+                        out.select("digest", F.col(self.id_col).cast("long").alias("doc_id")),
                     )
-                    tmp = self.epoch_file + ".tmp"
-                    with open(tmp, "w") as f:
-                        f.write(str(seq))
-                    os.replace(tmp, self.epoch_file)
-                else:
-                    out.drop("digest").write.mode("append").parquet(self.docs_path)
-                if sigs is not None:
-                    sigs.write.mode("append").parquet(self.sigs_path)
-                if self.postings_flag:
-                    # Inverted-index maintenance is embarrassingly
-                    # incremental: tf is doc-local, so the batch's
-                    # postings/doclens just append; df, N, Σdl are
-                    # query-time aggregates over the merged index
-                    # (bm25_from_index), so the maintained index scores
-                    # EXACTLY like a from-scratch rebuild — invariant
-                    # pinned in tests/test_streaming.py. Same
-                    # at-least-once posture as the corpus append
-                    # (commits before the digest admission gate).
-                    from ..operators.cms import cms_build
-                    from ..operators.retrieval import build_postings
-
-                    post, dl = build_postings(
-                        out.drop("digest"), self.id_col, self.text_col
-                    )
-                    post.write.mode("append").parquet(self.postings_path)
-                    dl.write.mode("append").parquet(self.doclen_path)
-                    # the count-min sketch is a commutative monoid —
-                    # per-batch partial cells append; readers merge by
-                    # sum over (row, bucket) (cms_sketch()), identical
-                    # to a from-scratch build over the corpus
-                    cms_build(post, item_col="term", weight_col="tf").write.mode(
-                        "append"
-                    ).parquet(self.cms_path)
-                    # ... and the HyperLogLog registers are a max-monoid:
-                    # per-batch registers append, readers merge by max
-                    # (hll_sketch()) — distinct-term cardinality tracks
-                    # the growing corpus at 512 bytes of state
-                    from ..operators.hll import hll_registers
-
-                    hll_registers(post, "term").write.mode("append").parquet(
-                        self.hll_path
-                    )
-                    # ... and the HDR doc-length histogram is a
-                    # sum-monoid like the CMS: per-batch bucket counts
-                    # append, readers merge by sum — corpus length
-                    # percentiles from a few KB of maintained state
-                    from ..operators.quantiles import hdr_build
-
-                    hdr_build(
-                        dl.select(F.col("dl").cast("long").alias("dl")), "dl"
-                    ).write.mode("append").parquet(self.hdr_path)
-                    if self.positional_flag:
-                        # positions are doc-local like tf, so the
-                        # phrase index appends too — phrase queries
-                        # over the merged index match a from-scratch
-                        # build exactly
-                        from ..operators.retrieval import (
-                            build_positional_postings,
-                        )
-
-                        build_positional_postings(
-                            out.drop("digest"), self.id_col, self.text_col
-                        ).write.mode("append").parquet(self.positions_path)
-            if pre_gate is not None and pre_gate.limit(1).count():
-                self._maintain_clusters(pre_gate, near)
-            if accepted:
-                out.select(
-                    "digest", F.col(self.id_col).cast("long").alias("doc_id")
-                ).write.mode("append").parquet(self.index_path)
-        finally:
-            out.unpersist()
-            if pre_gate is not None:
-                pre_gate.unpersist()
+                if pre_gate is not None and pre_gate.limit(1).count():
+                    self._maintain_clusters(pre_gate, near)
+            finally:
+                out.unpersist()
+                if pre_gate is not None:
+                    pre_gate.unpersist()
         return {"arrived": arrived, "gated": n_gated, "accepted": accepted}
 
+    def _write_postings(self, docs: DataFrame) -> None:
+        """Inverted-index and sketch maintenance is embarrassingly
+        incremental: tf and positions are doc-local, so each batch adds
+        its own postings/doclens/positions; df, N, Σdl are query-time
+        aggregates over the merged index (bm25_from_index), and the
+        count-min sketch and HDR histogram (sum-monoids) and HyperLogLog
+        registers (a max-monoid) merge per-batch partials at read — so
+        every maintained model equals a from-scratch build over the
+        corpus (invariants pinned in tests/test_streaming.py)."""
+        from ..operators.cms import cms_build
+        from ..operators.hll import hll_registers
+        from ..operators.quantiles import hdr_build
+        from ..operators.retrieval import build_positional_postings, build_postings
+
+        post, dl = build_postings(docs, self.id_col, self.text_col)
+        self._write("postings", post)
+        self._write("doclens", dl)
+        self._write("cms", cms_build(post, item_col="term", weight_col="tf"))
+        self._write("hll", hll_registers(post, "term"))
+        self._write("hdr", hdr_build(dl.select(F.col("dl").cast("long").alias("dl")), "dl"))
+        if self.positional_flag:
+            self._write("positions", build_positional_postings(docs, self.id_col, self.text_col))
+
     def corpus(self) -> DataFrame:
-        df = self.spark.read.parquet(self.docs_path)
-        return df.drop("_epoch") if "_epoch" in df.columns else df
+        return self._read("docs").drop("_seq")
 
     def current_epoch(self) -> int:
-        try:
-            with open(self.epoch_file) as f:
-                return int(f.read().strip() or 0)
-        except FileNotFoundError:
-            return 0
+        """The number of the last committed batch (ingest, retraction or
+        compaction; a batch that changed nothing does not count)."""
+        return self._stores.committed()["batch"]
 
     def corpus_asof(self, epoch: int) -> DataFrame:
-        """The corpus exactly as it stood after ingest batch ``epoch``
-        (requires ``epochs=True``). A partition-pruned read — the scan
-        touches only ``_epoch <= epoch`` directories (PartitionFilters,
-        plan-asserted in tests), so historical snapshots cost
-        proportional-to-snapshot I/O, not full-corpus I/O."""
-        df = self.spark.read.parquet(self.docs_path)
-        return df.filter(F.col("_epoch") <= epoch).drop("_epoch")
+        """The corpus exactly as it stood after batch ``epoch`` (see
+        :meth:`current_epoch`). The read names only the batch
+        directories up to ``epoch``, so historical snapshots cost
+        proportional-to-snapshot I/O, not full-corpus I/O. A batch
+        folded away by ``compact()`` raises ValueError."""
+        return self._read("docs", upto=epoch).drop("_seq")
 
     def postings(self) -> DataFrame:
         """The incrementally-maintained inverted index (term, id, tf)."""
-        return self._read_or_empty(
-            self.postings_path, f"term string, {self.id_col} long, tf long"
-        )
+        return self._read("postings")
 
     def doclens(self) -> DataFrame:
-        return self._read_or_empty(self.doclen_path, f"{self.id_col} long, dl int")
+        return self._read("doclens")
 
     def search(self, terms: list[str], k: int = 10) -> DataFrame:
         """BM25 over the maintained index — identical results to a
@@ -482,23 +510,19 @@ class CorpusIngestor:
         merged by sum (the sketch is a commutative monoid, so the
         merged table equals a from-scratch build over the corpus —
         invariant pinned in tests). d×w rows max."""
-        parts = self._read_or_empty(self.cms_path, "row int, bucket long, c long")
-        return parts.groupBy("row", "bucket").agg(F.sum("c").alias("c"))
+        return self._read("cms").groupBy("row", "bucket").agg(F.sum("c").alias("c"))
 
     def hll_sketch(self) -> DataFrame:
         """The maintained HyperLogLog register table: per-batch
         registers merged by max (max is the sketch's monoid, so the
         merged table equals a from-scratch build over the corpus's
         distinct terms — invariant pinned in tests). m rows max."""
-        parts = self._read_or_empty(self.hll_path, "idx long, r int")
-        return parts.groupBy("idx").agg(F.max("r").alias("r"))
+        return self._read("hll").groupBy("idx").agg(F.max("r").alias("r"))
 
     def positional_postings(self) -> DataFrame:
         """The incrementally-maintained positional index
         (term, id, pos); requires ``positional=True``."""
-        return self._read_or_empty(
-            self.positions_path, f"{self.id_col} long, term string, pos int"
-        )
+        return self._read("positions")
 
     def phrase_search(self, phrase: list[str], k: int = 10) -> DataFrame:
         """Exact-phrase top-k over the maintained positional index —
@@ -525,8 +549,7 @@ class CorpusIngestor:
         """The maintained HDR doc-length histogram: per-batch bucket
         counts merged by sum (equal to a from-scratch build over the
         corpus's doc lengths — invariant pinned in tests)."""
-        parts = self._read_or_empty(self.hdr_path, "bid long, c long")
-        return parts.groupBy("bid").agg(F.sum("c").alias("c"))
+        return self._read("hdr").groupBy("bid").agg(F.sum("c").alias("c"))
 
     def doclen_quantiles(self, quantiles: list[float]) -> DataFrame:
         """Corpus doc-length percentiles (token counts) answered from
@@ -544,6 +567,48 @@ class CorpusIngestor:
         return hll_estimate(self.hll_sketch())
 
 
+def _drive(
+    spark: SparkSession,
+    src_dir: str,
+    checkpoint_dir: str,
+    schema: str,
+    step,
+    tick: str | None = None,
+    on_batch=None,
+    max_files_per_trigger: int | None = None,
+):
+    """The one Structured Streaming driver of the ingest front doors:
+    JSON files under ``src_dir`` feed ``step(batch_df, batch_id) ->
+    stats`` once per micro-batch. Without a ``tick`` it drains what is
+    there (availableNow — the catch-up phase) and returns every
+    micro-batch's stats; with one it runs live on a processingTime
+    trigger, hands each batch's stats to ``on_batch`` and returns the
+    running query."""
+    stats: list[dict] = []
+    report = stats.append if tick is None else on_batch
+
+    def handle(batch_df: DataFrame, batch_id: int) -> None:
+        out = step(batch_df, batch_id)
+        if report is not None:
+            report(out)
+
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    trigger = {"availableNow": True} if tick is None else {"processingTime": tick}
+    q = (
+        reader.json(src_dir)
+        .writeStream.foreachBatch(handle)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(**trigger)
+        .start()
+    )
+    if tick is not None:
+        return q
+    q.awaitTermination()
+    return stats
+
+
 def run_ingest_stream(
     spark: SparkSession,
     src_dir: str,
@@ -558,21 +623,7 @@ def run_ingest_stream(
     processingTime to run live). Each micro-batch commits through
     ingest_batch; per-batch stats are collected for assertion/metrics."""
     ing = CorpusIngestor(spark, corpus_dir, quality_min_fp6=quality_min_fp6, near_dup=near_dup)
-    stats: list[dict] = []
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        stats.append(ing.ingest_batch(batch_df))
-
-    q = (
-        spark.readStream.schema(schema)
-        .json(src_dir)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return stats
+    return _drive(spark, src_dir, checkpoint_dir, schema, lambda df, _: ing.ingest_batch(df))
 
 
 def run_ingest_live(
@@ -594,23 +645,13 @@ def run_ingest_live(
     StreamingQuery — caller stops it. Restarting with the same
     checkpoint resumes; the digest index makes replays idempotent."""
     ing = CorpusIngestor(spark, corpus_dir, quality_min_fp6=quality_min_fp6, near_dup=near_dup)
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        stats = ing.ingest_batch(batch_df)
-        if on_batch is not None:
-            on_batch(stats)
-
-    return (
-        spark.readStream.schema(schema)
-        .json(src_dir)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=tick)
-        .start()
+    return _drive(
+        spark, src_dir, checkpoint_dir, schema, lambda df, _: ing.ingest_batch(df),
+        tick=tick, on_batch=on_batch,
     )
 
 
-class VectorIngestor:
+class VectorIngestor(_Stored):
     """Continuous EMBEDDING ingestion — the vector twin of
     :class:`CorpusIngestor`: each batch of (vec_id, embedding[, ...])
     rows is exact-deduplicated (value digest), near-deduplicated against
@@ -618,14 +659,14 @@ class VectorIngestor:
     (``similarity.hyperplane_delta_pairs`` band-probes the persisted
     signature index — O(batch × bands) per batch, base×base never
     redone) with exact-cosine verification on the candidates only, and
-    appended to a parquet vector store.
+    committed to a parquet vector store.
 
     Scale shape per batch: signatures are pure JVM folds on the batch;
     the band probe is an equi-join against a (vec_id, hsig) index —
     O(corpus vectors) narrow rows, not the vectors themselves; cosine
-    verification joins ONLY candidate ids back to the stores. Write
-    order = vectors → signatures → digest index (admission gate LAST,
-    same replay reasoning as the document gate).
+    verification joins ONLY candidate ids back to the stores. Vectors,
+    signatures and digests commit together in one pointer swap
+    (:class:`BatchStores`), the same as the document gate.
     """
 
     def __init__(
@@ -640,9 +681,16 @@ class VectorIngestor:
         cosine_threshold: float = 0.98,
     ) -> None:
         self.spark = spark
-        self.vectors_path = os.path.join(store_dir, "vectors")
-        self.hsigs_path = os.path.join(store_dir, "hsigs")
-        self.index_path = os.path.join(store_dir, "digests")
+        self._stores = BatchStores(
+            spark,
+            store_dir,
+            {
+                "vectors": f"{id_col} long, {vec_col} array<double>",
+                "hsigs": f"{id_col} long, hsig string",
+                "digests": f"digest string, {id_col} long",
+            },
+        )
+        self.vectors_path = self._stores.path("vectors")
         self.dim = dim
         self.id_col = id_col
         self.vec_col = vec_col
@@ -650,84 +698,81 @@ class VectorIngestor:
         self.n_bands = n_bands
         self.cosine_threshold = cosine_threshold
 
-    def _read_or_empty(self, path: str, schema: str) -> DataFrame:
-        import glob
-
-        if os.path.isdir(path) and (
-            glob.glob(os.path.join(path, "*.parquet")) or glob.glob(os.path.join(path, "part-*"))
-        ):
-            return self.spark.read.parquet(path)
-        return self.spark.createDataFrame([], schema)
-
     def _hsigs(self) -> DataFrame:
-        return self._read_or_empty(self.hsigs_path, f"{self.id_col} long, hsig string")
+        return self._read("hsigs").drop("_seq")
 
     def _digests(self) -> DataFrame:
-        return self._read_or_empty(self.index_path, f"digest string, {self.id_col} long")
+        return self._read("digests").drop("_seq")
 
     def vectors(self) -> DataFrame:
-        return self.spark.read.parquet(self.vectors_path)
+        return self._read("vectors").drop("_seq")
+
+    def history_vectors(self) -> DataFrame:
+        """Visible (id, vector) history for the verify join."""
+        return self._read("vectors").select(self.id_col, self.vec_col)
 
     def ingest_batch(self, vecs: DataFrame) -> dict:
         from ..operators import similarity as S
 
-        arrived = vecs.count()
-        # value digest: exact float-wise identity (deterministic JVM
-        # float→string rendering on both writer and prober)
-        digest = F.md5(
-            F.concat_ws(",", F.transform(F.col(self.vec_col), lambda x: x.cast("string")))
-        )
-        with_digest = vecs.withColumn("digest", digest)
-        rec = F.struct(*[F.col(c) for c in with_digest.columns])
-        in_batch = (
-            with_digest.groupBy("digest")
-            .agg(F.min_by(rec, F.col(self.id_col)).alias("_rec"))
-            .select("_rec.*")
-        )
-        fresh = in_batch.join(self._digests(), "digest", "left_anti").persist()
-        try:
-            # same materialization discipline as the document gate: the
-            # batch signatures and the verified pair set are each
-            # computed ONCE (lazily, the signature fold re-ran for the
-            # band probe and the hsigs append, and the cosine-verify
-            # join re-ran for the admission count and every write)
-            sig_new = S.hyperplane_signature(
-                fresh, self.dim, self.vec_col, self.id_col, planes=self.planes
-            ).localCheckpoint()
-            cand = S.hyperplane_delta_pairs(
-                self._hsigs(), sig_new, self.id_col, self.planes, self.n_bands
+        with self._stores.batch(self._SEQ_STEP):
+            arrived = vecs.count()
+            # value digest: exact float-wise identity (deterministic JVM
+            # float→string rendering on both writer and prober)
+            digest = F.md5(
+                F.concat_ws(",", F.transform(F.col(self.vec_col), lambda x: x.cast("string")))
             )
-            # exact-cosine verify on candidates only: ids join back to
-            # the vector store (history) ∪ the batch — candidate-sized
-            all_vecs = self._read_or_empty(
-                self.vectors_path, f"{self.id_col} long, {self.vec_col} array<double>"
-            ).select(self.id_col, self.vec_col).unionByName(
-                fresh.select(self.id_col, self.vec_col)
+            with_digest = vecs.withColumn("digest", digest)
+            rec = F.struct(*[F.col(c) for c in with_digest.columns])
+            in_batch = (
+                with_digest.groupBy("digest")
+                .agg(F.min_by(rec, F.col(self.id_col)).alias("_rec"))
+                .select("_rec.*")
             )
-            va = all_vecs.select(F.col(self.id_col).alias("id_a"), F.col(self.vec_col).alias("_ea"))
-            vb = all_vecs.select(F.col(self.id_col).alias("id_b"), F.col(self.vec_col).alias("_eb"))
-            near = (
-                F.broadcast(cand)
-                .join(va, "id_a")
-                .join(vb, "id_b")
-                .filter(_cosine_ge(F.col("_ea"), F.col("_eb"), self.cosine_threshold))
-                .select("id_a", "id_b")
-                .localCheckpoint()
-            )
-            drops = _directed_drops(near, fresh.select(self.id_col), self.id_col)
-            accepted_df = fresh.join(drops, self.id_col, "left_anti").persist()
-            accepted = accepted_df.count()
-            if accepted:
-                accepted_df.drop("digest").write.mode("append").parquet(self.vectors_path)
-                sig_new.join(drops, self.id_col, "left_anti").write.mode("append").parquet(
-                    self.hsigs_path
+            fresh = in_batch.join(self._digests(), "digest", "left_anti").persist()
+            try:
+                # same materialization discipline as the document gate: the
+                # batch signatures and the verified pair set are each
+                # computed ONCE (lazily, the signature fold re-ran for the
+                # band probe and the hsigs write, and the cosine-verify
+                # join re-ran for the admission count and every write)
+                sig_new = S.hyperplane_signature(
+                    fresh, self.dim, self.vec_col, self.id_col, planes=self.planes
+                ).localCheckpoint()
+                cand = S.hyperplane_delta_pairs(
+                    self._hsigs(), sig_new, self.id_col, self.planes, self.n_bands
                 )
-                accepted_df.select(
-                    "digest", F.col(self.id_col).cast("long").alias(self.id_col)
-                ).write.mode("append").parquet(self.index_path)
-            accepted_df.unpersist()
-        finally:
-            fresh.unpersist()
+                # exact-cosine verify on candidates only: ids join back to
+                # the vector store (history) ∪ the batch — candidate-sized
+                all_vecs = self.history_vectors().unionByName(
+                    fresh.select(self.id_col, self.vec_col)
+                )
+                va = all_vecs.select(F.col(self.id_col).alias("id_a"), F.col(self.vec_col).alias("_ea"))
+                vb = all_vecs.select(F.col(self.id_col).alias("id_b"), F.col(self.vec_col).alias("_eb"))
+                near = (
+                    F.broadcast(cand)
+                    .join(va, "id_a")
+                    .join(vb, "id_b")
+                    .filter(_cosine_ge(F.col("_ea"), F.col("_eb"), self.cosine_threshold))
+                    .select("id_a", "id_b")
+                    .localCheckpoint()
+                )
+                drops = _directed_drops(near, fresh.select(self.id_col), self.id_col)
+                accepted_df = fresh.join(drops, self.id_col, "left_anti").persist()
+                try:
+                    accepted = accepted_df.count()
+                    if accepted:
+                        self._write("vectors", accepted_df.drop("digest"))
+                        self._write("hsigs", sig_new.join(drops, self.id_col, "left_anti"))
+                        self._write(
+                            "digests",
+                            accepted_df.select(
+                                "digest", F.col(self.id_col).cast("long").alias(self.id_col)
+                            ),
+                        )
+                finally:
+                    accepted_df.unpersist()
+            finally:
+                fresh.unpersist()
         return {"arrived": arrived, "accepted": accepted}
 
 
@@ -747,18 +792,4 @@ def run_vector_ingest_stream(
     commits through ``ingest_batch``; per-batch stats are returned."""
     schema = schema or "vec_id long, embedding array<double>"
     ing = VectorIngestor(spark, store_dir, dim=dim, cosine_threshold=cosine_threshold)
-    stats: list[dict] = []
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        stats.append(ing.ingest_batch(batch_df))
-
-    q = (
-        spark.readStream.schema(schema)
-        .json(src_dir)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return stats
+    return _drive(spark, src_dir, checkpoint_dir, schema, lambda df, _: ing.ingest_batch(df))

@@ -13,11 +13,12 @@ parquet — no table format dependency.
 Mechanics — one atomic visibility switch instead of three rewrites:
 
 - every written row (corpus, digest index, signature index, near-dup
-  edge) is stamped with a monotone batch sequence ``_seq``;
-- a retraction appends ``(doc_id, upto_seq)`` tombstones; EVERY reader
+  edge) is stamped with a monotone batch sequence ``_seq``, which the
+  store pointer carries (an ingest advances it, a retraction does not);
+- a retraction writes ``(doc_id, upto_seq)`` tombstones; EVERY reader
   (corpus view, admission gate, near-dup index, edge set) filters
   ``_seq > max(upto_seq)`` per id. Because all readers consult the
-  same tombstone table, one append retracts a document everywhere at
+  same tombstone table, one commit retracts a document everywhere at
   once — there is no window where the corpus still shows a row whose
   digest has stopped gating duplicates;
 - an upsert is retract-then-ingest: the new version re-enters through
@@ -33,60 +34,63 @@ Mechanics — one atomic visibility switch instead of three rewrites:
   per batch (doc-count-sized metadata) precisely to make this
   possible.
 
-Replay safety: tombstone appends are idempotent under max() semantics,
-the cluster commit reuses the mirror-pointer epoch swap, and the
-sequence pointer advances with os.replace — a replayed batch re-stamps
-the same rows (duplicate rows in storage, invisible-or-identical to
-readers; compaction reclaims them).
+Replay safety: every ingest, retraction and compaction is one batch of
+:class:`.ingest.BatchStores` — its writes, the relabeled clusters and
+the advanced ``_seq`` commit in one pointer swap. A crash at any write
+point leaves readers on the previous batch; a replay reads that same
+state, restamps the same ``_seq`` and overwrites its own directories,
+so storage holds each row once, exactly as after a crash-free run.
 
-Storage note: retracted rows stay in parquet until compacted
-(``sources.compact_write`` over the visible view). At 100 TB the
-tombstone table is retraction-count-sized and broadcast-joins against
-every reader.
+Storage note: retracted rows stay in parquet until :meth:`compact`
+rewrites the stores to their visible rows. At 100 TB the tombstone
+table is retraction-count-sized and broadcast-joins against every
+reader.
 """
 
 from __future__ import annotations
 
-import os
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators import dedup as D
-from ..operators import text as X
-from .ingest import DIGEST_SCHEMA, CorpusIngestor, VectorIngestor, _cosine_ge, _directed_drops
+from .ingest import CorpusIngestor, VectorIngestor, _drive
 
 TOMB_SCHEMA = "tomb_id long, upto_seq long"
 EDGE_SCHEMA = "id_a long, id_b long, _seq long"
 
 
 class _TombstoneStore:
-    """Seq-pointer + tombstone machinery shared by the mutable document
-    and vector gates. Requires ``self.tombs_path``, ``self.seq_path``
-    and ``self._read_or_empty`` on the host class."""
+    """Tombstone visibility shared by the mutable document and vector
+    gates: the stamped stores read through the tombstones and every
+    row written through ``_write`` carries the batch's ``_seq``."""
 
-    def _current_seq(self) -> int:
-        try:
-            with open(self.seq_path) as f:
-                return int(f.read().strip() or 0)
-        except FileNotFoundError:
-            return 0
+    _SEQ_STEP = 1  # an ingest advances the sequence; a retraction does not
 
-    def _advance_seq(self) -> int:
-        nxt = self._current_seq() + 1
-        os.makedirs(os.path.dirname(self.seq_path), exist_ok=True)
-        tmp = self.seq_path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(nxt))
-        os.replace(tmp, self.seq_path)
-        return nxt
+    def _stamped(self, keys: dict[str, str]) -> None:
+        """Declare the stores whose rows carry ``_seq`` and read through
+        the tombstones (store → id column)."""
+        self._keys = keys
+        for store in keys:
+            self._stores.schemas[store] += ", _seq long"
+        self._stores.schemas["tombstones"] = TOMB_SCHEMA
+        self.tombs_path = self._stores.path("tombstones")
 
-    def _tomb_max(self) -> DataFrame:
-        t = self._read_or_empty(self.tombs_path, TOMB_SCHEMA)
+    def _read(self, store: str, upto: int | None = None) -> DataFrame:
+        raw = self._stores.read(store, upto)
+        key = self._keys.get(store)
+        return raw if key is None else self._visible(raw, key, upto)
+
+    def _write(self, store: str, df: DataFrame) -> None:
+        self._stores.write(store, df.withColumn("_seq", F.lit(self._stores.seq).cast("long")))
+
+    def _tomb_max(self, upto: int | None = None) -> DataFrame:
+        t = self._stores.read("tombstones", upto)
         return t.groupBy("tomb_id").agg(F.max("upto_seq").alias("_upto"))
 
-    def _visible(self, df: DataFrame, id_field: str) -> DataFrame:
-        t = self._tomb_max().withColumnRenamed("tomb_id", id_field)
+    def _visible(self, df: DataFrame, id_field: str, upto: int | None = None) -> DataFrame:
+        t = self._tomb_max(upto).withColumnRenamed("tomb_id", id_field)
         return (
             df.join(t, id_field, "left")
             .filter(F.col("_seq") > F.coalesce(F.col("_upto"), F.lit(-1)))
@@ -95,11 +99,10 @@ class _TombstoneStore:
 
     def _append_tombstones(self, ids: DataFrame, id_field: str) -> int:
         """One atomic visibility switch: every reader consults this
-        table, so a single append retracts the ids everywhere."""
-        seq = self._current_seq()
+        table, so a single committed write retracts the ids everywhere."""
         # localCheckpoint: the count below and the write after it must see
         # the SAME id set even when ``ids`` is a lazy plan over the very
-        # stores this append hides rows from.
+        # stores this write hides rows from.
         t = (
             ids.select(F.col(id_field).cast("long").alias("tomb_id"))
             .distinct()
@@ -107,34 +110,56 @@ class _TombstoneStore:
         )
         n = t.count()
         if n:
-            t.withColumn("upto_seq", F.lit(seq).cast("long")).write.mode("append").parquet(
-                self.tombs_path
+            self._stores.write(
+                "tombstones", t.withColumn("upto_seq", F.lit(self._stores.seq).cast("long"))
             )
         return n
+
+    def _compact(self, extra: dict[str, DataFrame]) -> None:
+        """One batch that replaces every written stamped store (and
+        ``extra``) by its visible rows, ``_seq`` kept, and drops the
+        tombstones. A crash before its commit leaves the uncompacted
+        stores in place."""
+        with self._stores.batch():
+            written = self._stores.committed()["stores"]
+            for store, rows in ({s: self._read(s) for s in self._keys} | extra).items():
+                if store in written:
+                    self._stores.write(store, rows, replace=True)
+            self._stores.clear("tombstones")
+
+    def upsert_batch(self, rows: DataFrame) -> dict:
+        """Retract the ids that already exist (visible anywhere in the
+        gate), then ingest the batch through the full front door — the
+        new versions re-gate, re-dedup, and re-pair like any arrival."""
+        key = self._keys["digests"]
+        existing = rows.select(F.col(self.id_col).cast("long").alias(self.id_col)).join(
+            self._read("digests").select(F.col(key).alias(self.id_col)).distinct(),
+            self.id_col,
+            "left_semi",
+        )
+        r = self.retract_batch(existing)
+        stats = self.ingest_batch(rows)
+        stats["retracted"] = r["retracted"]
+        return stats
 
 
 class MutableCorpusIngestor(_TombstoneStore, CorpusIngestor):
     def __init__(self, *args, **kwargs) -> None:
         super().__init__(*args, **kwargs)
-        base = os.path.dirname(self.docs_path)
-        self.tombs_path = os.path.join(base, "tombstones")
-        self.edges_path = os.path.join(base, "edges")
-        self.seq_path = os.path.join(base, "_SEQ")
-
-    def _index(self) -> DataFrame:
-        raw = self._read_or_empty(self.index_path, DIGEST_SCHEMA + ", _seq long")
-        return self._visible(raw, "doc_id").select("digest", "doc_id")
-
-    def _sigs(self) -> DataFrame:
-        raw = self._read_or_empty(self.sigs_path, self._sig_schema() + ", _seq long")
-        return self._visible(raw, self.id_col).drop("_seq")
+        if self.postings_flag or self.positional_flag:
+            raise ValueError(
+                "MutableCorpusIngestor keeps no postings or positional index: "
+                "a retraction could not take a document's terms back out of them"
+            )
+        self._stamped({"docs": self.id_col, "sigs": self.id_col, "digests": "doc_id"})
+        self._stores.schemas["edges"] = EDGE_SCHEMA
 
     def _edges_visible(self) -> DataFrame:
         """Persisted near-dup edges whose BOTH endpoints are alive at
         the edge's seq (an endpoint retracted after the edge was drawn
         kills the edge; a later re-add does not resurrect it — the new
         version re-pairs on ingest)."""
-        raw = self._read_or_empty(self.edges_path, EDGE_SCHEMA)
+        raw = self._stores.read("edges")
         va = self._visible(raw.withColumnRenamed("id_a", "doc_id"), "doc_id").withColumnRenamed(
             "doc_id", "id_a"
         )
@@ -142,91 +167,29 @@ class MutableCorpusIngestor(_TombstoneStore, CorpusIngestor):
             "doc_id", "id_b"
         )
 
-    def corpus(self) -> DataFrame:
-        raw = self.spark.read.parquet(self.docs_path)
-        return self._visible(raw, self.id_col).drop("_seq")
-
-    # -- write hooks ---------------------------------------------------
-
-    def _maintain_clusters(self, batch_nodes: DataFrame, near_pairs: DataFrame) -> str:
-        near_pairs.select(
-            "id_a", "id_b", F.lit(self._batch_seq).cast("long").alias("_seq")
-        ).write.mode("append").parquet(self.edges_path)
-        return super()._maintain_clusters(batch_nodes, near_pairs)
-
-    def ingest_batch(self, docs: DataFrame) -> dict:
-        """Base gate/dedup/append lifecycle with every written row
-        stamped by this batch's sequence number (same commit order:
-        corpus → sigs → clusters/edges → digest index)."""
-        self._batch_seq = self._advance_seq()
-        seq = F.lit(self._batch_seq).cast("long")
-        scored = X.quality_score(docs, self.id_col, self.text_col).select(self.id_col, "quality_fp6")
-        # one aggregate for both observability counts (quality_score is
-        # a pure projection — one row per doc), same as the base gate
-        _counts = scored.agg(
-            F.count(F.lit(1)).alias("_arrived"),
-            F.sum((F.col("quality_fp6") >= self.quality_min_fp6).cast("long")).alias("_gated"),
-        ).first()
-        arrived, n_gated = _counts["_arrived"], int(_counts["_gated"] or 0)
-        gated = docs.join(scored.filter(F.col("quality_fp6") >= self.quality_min_fp6), self.id_col)
-        with_digest = gated.withColumn("digest", F.md5(F.col(self.text_col).cast("binary")))
-        rec = F.struct(*[F.col(c) for c in with_digest.columns])
-        in_batch = (
-            with_digest.groupBy("digest")
-            .agg(F.min_by(rec, F.col(self.id_col)).alias("_rec"))
-            .select("_rec.*")
-        )
-        fresh = in_batch.join(self._index(), "digest", "left_anti")
-        sigs = None
-        near = None
-        pre_gate = None
-        if self.near_dup:
-            pre_gate = fresh.persist()
-            # sigs/near come back checkpointed from the gate (see
-            # ingest._near_dup_gate's materialization discipline)
-            fresh, sigs, near = self._near_dup_gate(pre_gate)
-        out = fresh.persist()
-        try:
-            accepted = out.count()
-            if accepted:
-                out.drop("digest").withColumn("_seq", seq).write.mode("append").parquet(
-                    self.docs_path
-                )
-                if sigs is not None:
-                    sigs.withColumn("_seq", seq).write.mode("append").parquet(self.sigs_path)
-            if pre_gate is not None and pre_gate.limit(1).count():
-                self._maintain_clusters(pre_gate, near)
-            if accepted:
-                out.select(
-                    "digest", F.col(self.id_col).cast("long").alias("doc_id")
-                ).withColumn("_seq", seq).write.mode("append").parquet(self.index_path)
-        finally:
-            out.unpersist()
-            if pre_gate is not None:
-                pre_gate.unpersist()
-        return {"arrived": arrived, "gated": n_gated, "accepted": accepted}
+    def _maintain_clusters(self, batch_nodes: DataFrame, near_pairs: DataFrame) -> None:
+        self._write("edges", near_pairs.select("id_a", "id_b"))
+        super()._maintain_clusters(batch_nodes, near_pairs)
 
     # -- retract / upsert ----------------------------------------------
 
     def retract_batch(self, removed_ids: DataFrame) -> dict:
-        """Retract documents by id: one tombstone append switches them
+        """Retract documents by id: one tombstone write switches them
         off for every reader (corpus view, admission gate, signature
-        index, edge set), then cluster labels are recomputed for the
-        affected components only. Idempotent on replay."""
-        # Pin the id set BEFORE the tombstone append: callers (upsert_batch)
-        # pass plans derived from the stores this method MUTATES — e.g.
-        # ``existing`` reads the digest index through the tombstone filter,
-        # so once the tombstones land, re-evaluating the lazy plan yields a
-        # different (empty) id set and the relabel silently drops labels.
+        index, edge set), and cluster labels are recomputed for the
+        affected components only — both commit in one batch. Idempotent
+        on replay."""
+        # Pin the id set BEFORE the tombstones are written: callers
+        # (upsert_batch) pass plans derived from the stores this method
+        # MUTATES, and the relabel must see the same ids as the tombstones.
         ids = (
             removed_ids.select(F.col(self.id_col).cast("long").alias("doc_id"))
             .distinct()
             .localCheckpoint()
         )
-        n = self._append_tombstones(ids, "doc_id")
-        if n == 0:
-            return {"retracted": 0, "relabeled_components": 0}
-        relabeled = self._relabel_after_retract(ids)
+        with self._stores.batch():
+            n = self._append_tombstones(ids, "doc_id")
+            relabeled = self._relabel_after_retract(ids) if n else 0
         return {"retracted": n, "relabeled_components": relabeled}
 
     def _relabel_after_retract(self, removed: DataFrame) -> int:
@@ -256,54 +219,15 @@ class MutableCorpusIngestor(_TombstoneStore, CorpusIngestor):
         selfs = sub_nodes.select(F.col("node").alias("id_a"), F.col("node").alias("id_b"))
         relab = D.connected_components(sub_edges.unionByName(selfs).distinct())
         new_labels = keep.unionByName(relab.select("node", "component"))
-        fp = removed.agg(
-            F.count(F.lit(1)).alias("n"), F.coalesce(F.sum("doc_id"), F.lit(0)).alias("s")
-        ).first()
-        epoch = f"retract_s{self._current_seq()}_n{fp['n']}_x{fp['s']}"
-        self._commit_clusters(new_labels.localCheckpoint(), epoch)
+        self._stores.write("clusters", new_labels.localCheckpoint(), replace=True)
         return n_hit
 
     def compact(self) -> None:
         """Reclaim retracted rows: rewrite every store to its visible
-        rows (keeping the _seq stamps) and clear the tombstones. Safe
-        to crash at any point — see :func:`_compact_store`."""
-        raw_docs = self.spark.read.parquet(self.docs_path)
-        docs_v = self._visible(raw_docs, self.id_col)
-        sigs_v = self._visible(
-            self._read_or_empty(self.sigs_path, self._sig_schema() + ", _seq long"),
-            self.id_col,
-        )
-        idx_v = self._visible(
-            self._read_or_empty(self.index_path, DIGEST_SCHEMA + ", _seq long"), "doc_id"
-        )
-        edges_v = self._edges_visible().select("id_a", "id_b", "_seq")
-        _compact_store(
-            self.spark,
-            [
-                (self.docs_path, docs_v),
-                (self.sigs_path, sigs_v),
-                (self.index_path, idx_v),
-                (self.edges_path, edges_v),
-            ],
-            self.tombs_path,
-        )
-
-    def upsert_batch(self, docs: DataFrame) -> dict:
-        """Retract the ids that already exist (visible anywhere in the
-        gate), then ingest the batch through the full front door — the
-        new versions re-gate, re-dedup, and re-pair like any arrival."""
-        existing = (
-            docs.select(F.col(self.id_col).cast("long").alias("doc_id"))
-            .join(
-                self._index().select("doc_id").distinct(),
-                "doc_id",
-                "left_semi",
-            )
-        )
-        r = self.retract_batch(existing)
-        stats = self.ingest_batch(docs)
-        stats["retracted"] = r["retracted"]
-        return stats
+        rows (keeping the _seq stamps) and clear the tombstones, as one
+        batch — a crash before its commit leaves the uncompacted stores
+        in place, and a rerun starts over."""
+        self._compact({"edges": self._edges_visible().select("id_a", "id_b", "_seq")})
 
 
 class MutableVectorIngestor(_TombstoneStore, VectorIngestor):
@@ -317,154 +241,39 @@ class MutableVectorIngestor(_TombstoneStore, VectorIngestor):
 
     def __init__(self, *args, **kwargs) -> None:
         super().__init__(*args, **kwargs)
-        base = os.path.dirname(self.vectors_path)
-        self.tombs_path = os.path.join(base, "tombstones")
-        self.seq_path = os.path.join(base, "_SEQ")
-
-    def _hsigs(self) -> DataFrame:
-        raw = self._read_or_empty(self.hsigs_path, f"{self.id_col} long, hsig string, _seq long")
-        return self._visible(raw, self.id_col).drop("_seq")
-
-    def _digests(self) -> DataFrame:
-        raw = self._read_or_empty(self.index_path, f"digest string, {self.id_col} long, _seq long")
-        return self._visible(raw, self.id_col).drop("_seq")
-
-    def vectors(self) -> DataFrame:
-        raw = self.spark.read.parquet(self.vectors_path)
-        return self._visible(raw, self.id_col).drop("_seq")
-
-    def ingest_batch(self, vecs: DataFrame) -> dict:
-        from ..operators import similarity as S
-
-        seq = F.lit(self._advance_seq()).cast("long")
-        arrived = vecs.count()
-        digest = F.md5(
-            F.concat_ws(",", F.transform(F.col(self.vec_col), lambda x: x.cast("string")))
-        )
-        with_digest = vecs.withColumn("digest", digest)
-        rec = F.struct(*[F.col(c) for c in with_digest.columns])
-        in_batch = (
-            with_digest.groupBy("digest")
-            .agg(F.min_by(rec, F.col(self.id_col)).alias("_rec"))
-            .select("_rec.*")
-        )
-        fresh = in_batch.join(self._digests(), "digest", "left_anti").persist()
-        try:
-            # signatures and verified pairs each materialize ONCE (same
-            # discipline as the document gate — see ingest._near_dup_gate)
-            sig_new = S.hyperplane_signature(
-                fresh, self.dim, self.vec_col, self.id_col, planes=self.planes
-            ).localCheckpoint()
-            cand = S.hyperplane_delta_pairs(
-                self._hsigs(), sig_new, self.id_col, self.planes, self.n_bands
-            )
-            all_vecs = self.history_vectors().unionByName(
-                fresh.select(self.id_col, self.vec_col)
-            )
-            va = all_vecs.select(F.col(self.id_col).alias("id_a"), F.col(self.vec_col).alias("_ea"))
-            vb = all_vecs.select(F.col(self.id_col).alias("id_b"), F.col(self.vec_col).alias("_eb"))
-            near = (
-                F.broadcast(cand)
-                .join(va, "id_a")
-                .join(vb, "id_b")
-                .filter(_cosine_ge(F.col("_ea"), F.col("_eb"), self.cosine_threshold))
-                .select("id_a", "id_b")
-                .localCheckpoint()
-            )
-            drops = _directed_drops(near, fresh.select(self.id_col), self.id_col)
-            accepted_df = fresh.join(drops, self.id_col, "left_anti").persist()
-            accepted = accepted_df.count()
-            if accepted:
-                accepted_df.drop("digest").withColumn("_seq", seq).write.mode("append").parquet(
-                    self.vectors_path
-                )
-                sig_new.join(drops, self.id_col, "left_anti").withColumn(
-                    "_seq", seq
-                ).write.mode("append").parquet(self.hsigs_path)
-                accepted_df.select(
-                    "digest", F.col(self.id_col).cast("long").alias(self.id_col)
-                ).withColumn("_seq", seq).write.mode("append").parquet(self.index_path)
-            accepted_df.unpersist()
-        finally:
-            fresh.unpersist()
-        return {"arrived": arrived, "accepted": accepted}
-
-    def history_vectors(self) -> DataFrame:
-        """Visible (id, vector) history for the verify join."""
-        raw = self._read_or_empty(
-            self.vectors_path, f"{self.id_col} long, {self.vec_col} array<double>, _seq long"
-        )
-        return self._visible(raw, self.id_col).select(self.id_col, self.vec_col)
+        self._stamped({"vectors": self.id_col, "hsigs": self.id_col, "digests": self.id_col})
 
     def retract_batch(self, removed_ids: DataFrame) -> dict:
-        return {"retracted": self._append_tombstones(removed_ids, self.id_col)}
+        with self._stores.batch():
+            return {"retracted": self._append_tombstones(removed_ids, self.id_col)}
 
     def compact(self) -> None:
         """Reclaim retracted vectors: rewrite the three stores to their
-        visible rows, clear tombstones last (see :func:`_compact_store`)."""
-        vec_raw = self.spark.read.parquet(self.vectors_path)
-        _compact_store(
-            self.spark,
-            [
-                (self.vectors_path, self._visible(vec_raw, self.id_col)),
-                (
-                    self.hsigs_path,
-                    self._visible(
-                        self._read_or_empty(
-                            self.hsigs_path, f"{self.id_col} long, hsig string, _seq long"
-                        ),
-                        self.id_col,
-                    ),
-                ),
-                (
-                    self.index_path,
-                    self._visible(
-                        self._read_or_empty(
-                            self.index_path,
-                            f"digest string, {self.id_col} long, _seq long",
-                        ),
-                        self.id_col,
-                    ),
-                ),
-            ],
-            self.tombs_path,
-        )
-
-    def upsert_batch(self, vecs: DataFrame) -> dict:
-        existing = vecs.select(F.col(self.id_col).cast("long").alias(self.id_col)).join(
-            self._digests().select(self.id_col).distinct(), self.id_col, "left_semi"
-        )
-        r = self.retract_batch(existing)
-        stats = self.ingest_batch(vecs)
-        stats["retracted"] = r["retracted"]
-        return stats
+        visible rows and clear the tombstones, as one batch."""
+        self._compact({})
 
 
-def _compact_store(spark, paths_and_views: list[tuple[str, DataFrame]], tombs_path: str) -> None:
-    """Rewrite each store to its visible rows, then clear tombstones.
+def _cdc_step(ing, batch_df: DataFrame, batch_id: int) -> dict:
+    """One CDC micro-batch: deletes first, then upserts."""
+    batch_df = batch_df.persist()
+    try:
+        dels = batch_df.filter(F.col("op") == "d").select(ing.id_col)
+        ups = batch_df.filter(F.col("op") == "u").drop("op")
+        out = {"batch": batch_id}
+        out.update({f"del_{k}": v for k, v in ing.retract_batch(dels).items()})
+        if ups.limit(1).count():
+            out.update(ing.upsert_batch(ups))
+        return out
+    finally:
+        batch_df.unpersist()
 
-    Crash-safe ORDER, not atomicity: every intermediate state reads
-    identically. A store that is already compacted has no dead rows, so
-    the (still present) tombstones filter nothing from it; stores not
-    yet rewritten still carry dead rows, which the tombstones still
-    hide. Tombstones are cleared LAST — a crash anywhere earlier
-    leaves a state that is merely un-reclaimed, never wrong. Each
-    store's own swap is made effectively atomic by materializing the
-    visible view (localCheckpoint — the read plan must not reference
-    the files being replaced), writing a sibling directory, and
-    os.replace'ing it over the live name."""
-    import shutil
 
-    for path, view in paths_and_views:
-        if not os.path.isdir(path):
-            continue
-        snap = view.localCheckpoint()
-        tmp = path + ".compact"
-        snap.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(path)
-        os.replace(tmp, path)
-    if os.path.isdir(tombs_path):
-        shutil.rmtree(tombs_path)
+def _run_cdc(spark, ing, src_dir, checkpoint_dir, schema, available_now, max_files_per_trigger):
+    return _drive(
+        spark, src_dir, checkpoint_dir, schema, partial(_cdc_step, ing),
+        tick=None if available_now else "1 second",
+        max_files_per_trigger=max_files_per_trigger,
+    )
 
 
 def run_cdc_ingest_stream(
@@ -490,34 +299,9 @@ def run_cdc_ingest_stream(
     micro-batch in arrival (mtime) order — availableNow honors it, so a
     scripted file sequence replays as the scripted batch sequence."""
     ing = MutableCorpusIngestor(spark, corpus_dir, quality_min_fp6=quality_min_fp6, near_dup=near_dup)
-    stats: list[dict] = []
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.persist()
-        try:
-            dels = batch_df.filter(F.col("op") == "d").select(ing.id_col)
-            ups = batch_df.filter(F.col("op") == "u").drop("op")
-            out = {"batch": batch_id}
-            out.update({f"del_{k}": v for k, v in ing.retract_batch(dels).items()})
-            if ups.limit(1).count():
-                out.update(ing.upsert_batch(ups))
-            stats.append(out)
-        finally:
-            batch_df.unpersist()
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    writer = (
-        reader.json(src_dir)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
+    return _run_cdc(
+        spark, ing, src_dir, checkpoint_dir, schema, trigger_available_now, max_files_per_trigger
     )
-    if trigger_available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return stats
-    return writer.trigger(processingTime="1 second").start()
 
 
 def run_cdc_vector_stream(
@@ -538,31 +322,6 @@ def run_cdc_vector_stream(
     ``max_files_per_trigger=1`` replays a scripted file sequence as the
     scripted batch sequence."""
     ing = MutableVectorIngestor(spark, store_dir, dim=dim, cosine_threshold=cosine_threshold)
-    stats: list[dict] = []
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.persist()
-        try:
-            dels = batch_df.filter(F.col("op") == "d").select(ing.id_col)
-            ups = batch_df.filter(F.col("op") == "u").drop("op")
-            out = {"batch": batch_id}
-            out.update({f"del_{k}": v for k, v in ing.retract_batch(dels).items()})
-            if ups.limit(1).count():
-                out.update(ing.upsert_batch(ups))
-            stats.append(out)
-        finally:
-            batch_df.unpersist()
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    writer = (
-        reader.json(src_dir)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
+    return _run_cdc(
+        spark, ing, src_dir, checkpoint_dir, schema, trigger_available_now, max_files_per_trigger
     )
-    if trigger_available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return stats
-    return writer.trigger(processingTime="1 second").start()

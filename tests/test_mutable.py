@@ -317,3 +317,13 @@ def test_upsert_lazy_existing_ids_keep_other_labels(spark, tmp_path):
     assert labels[2] == 2, f"survivor label lost/wrong: {labels}"
     assert labels[1] == 1  # re-ingested version re-labeled
     assert set(labels) == {1, 2}
+
+
+def test_mutable_rejects_postings_and_positional(spark, tmp_path):
+    """The mutable gate keeps no inverted index, so asking for one must
+    fail loudly instead of leaving search() silently empty."""
+    import pytest
+
+    for kw in ({"postings": True}, {"postings": True, "positional": True}, {"positional": True}):
+        with pytest.raises(ValueError):
+            _ing(spark, tmp_path, **kw)

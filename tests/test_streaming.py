@@ -645,10 +645,15 @@ def test_near_dup_gate_pins_pre_append_state(spark, tmp_path):
     _, _, near = ing._near_dup_gate(b2)
     before = sorted((r.id_a, r.id_b) for r in near.collect())
     assert before == [(1, 30)]
-    # mutate the store the lazy plan would have re-read
-    spark.createDataFrame(
-        [tuple([999] + [0] * ing.num_hashes)], ing._sig_schema()
-    ).write.mode("append").parquet(ing.sigs_path)
+    # mutate the store the lazy plan would have re-read, through the
+    # store writer: a committed batch that adds a signature row
+    with ing._stores.batch():
+        ing._stores.write(
+            "sigs",
+            spark.createDataFrame(
+                [tuple([999] + [0] * ing.num_hashes)], ing._stores.schemas["sigs"]
+            ),
+        )
     assert sorted((r.id_a, r.id_b) for r in near.collect()) == before
     # the verified pair set is a materialized leaf — no join re-runs
     assert "Join" not in near._jdf.queryExecution().analyzed().toString()
@@ -909,13 +914,12 @@ def test_ingest_batch_drift_gate(spark, tmp_path):
 
 
 def test_ingest_epoch_time_travel(spark, tmp_path):
-    """epochs=True gives time travel: corpus_asof(n) returns exactly
-    the post-batch-n state via a partition-pruned read (_epoch is a
-    partition column — the scan's PartitionFilters prove snapshots
-    cost snapshot-sized I/O)."""
+    """Time travel on any ingestor: corpus_asof(n) returns exactly the
+    post-batch-n state, reading only the batch directories up to n (the
+    scan's input files prove snapshots cost snapshot-sized I/O)."""
     from actyxos_data_flow_spark.streaming.ingest import CorpusIngestor
 
-    ing = CorpusIngestor(spark, str(tmp_path / "c"), quality_min_fp6=0, epochs=True)
+    ing = CorpusIngestor(spark, str(tmp_path / "c"), quality_min_fp6=0)
     for i, text in enumerate(
         ["first doc alpha beta", "second doc gamma delta", "third doc epsilon zeta"]
     ):
@@ -928,10 +932,10 @@ def test_ingest_epoch_time_travel(spark, tmp_path):
     assert sorted(r.doc_id for r in ing.corpus_asof(2).collect()) == [1, 2]
     assert sorted(r.doc_id for r in ing.corpus_asof(3).collect()) == [1, 2, 3]
     assert sorted(r.doc_id for r in ing.corpus().collect()) == [1, 2, 3]
-    assert "_epoch" not in ing.corpus().columns
+    assert "_b" not in ing.corpus().columns
 
-    plan = ing.corpus_asof(1)._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "_epoch" in plan
+    files = ing.corpus_asof(1).inputFiles()
+    assert files and all("/docs/_b=1/" in f for f in files)
 
     # a duplicate replayed later never reaches a historical snapshot
     ing.ingest_batch(
