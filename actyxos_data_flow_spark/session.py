@@ -5,6 +5,13 @@ written so the same code scales to a multi-executor cluster: AQE handles
 runtime re-planning/skew, shuffle partitions sized to cores locally (set
 to ~2-3x total cores on a real cluster), Arrow enabled for the Pandas-UDF
 slow path.
+
+The generated-code cache holds ``CODEGEN_CACHE_MAX_ENTRIES`` compiled
+classes instead of Spark's default of 100. One pass of a registry query
+plus a mutable-store ingest → retract → upsert lifecycle compiles about
+165, so at 100 every pass evicted its own classes and compiled them
+again, on the driver and on executor threads alike. The cache is static
+and JVM-wide, so it can only be sized when the session is built.
 """
 
 from __future__ import annotations
@@ -12,6 +19,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Compiled-class cache size. Measured working set (perfbench, warm JVM):
+# a batch_queries pass compiles ~165 classes at 100 entries and ~10 at
+# 2,000, so 2,000 holds every plan shape a session runs, with headroom.
+CODEGEN_CACHE_MAX_ENTRIES = 2000
 
 
 def get_spark(app_name: str = "actyxos_data_flow_spark", cpus: int | None = None) -> SparkSession:
@@ -25,6 +37,7 @@ def get_spark(app_name: str = "actyxos_data_flow_spark", cpus: int | None = None
         # size shuffles to cores in local mode (cluster: ~2-3x total cores)
         .config("spark.sql.shuffle.partitions", n_shuffle)
         .config("spark.default.parallelism", n_shuffle)
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
         # AQE: runtime coalescing, skew-join splitting, broadcast demotion
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -388,8 +388,10 @@ class CorpusIngestor(_Stored):
                 ).alias("_gated"),
             ).first()
             arrived, n_gated = _counts["_arrived"], int(_counts["_gated"] or 0)
+            # join on the passing ids only: the score stays out of the corpus
             gated = docs.join(
-                scored.filter(F.col("quality_fp6") >= self.quality_min_fp6), self.id_col
+                scored.filter(F.col("quality_fp6") >= self.quality_min_fp6).select(self.id_col),
+                self.id_col,
             )
             with_digest = gated.withColumn(
                 "digest", F.md5(F.col(self.text_col).cast("binary"))

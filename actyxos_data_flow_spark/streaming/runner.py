@@ -69,6 +69,38 @@ def batch_bounds(pending: DataFrame, offset_col: str, events_per_txn: int) -> li
     return [min(b, max_off) for b in bounds] + [max_off]
 
 
+def offset_range(
+    df: DataFrame, offset_col: str, after: int | None = None, upto: int | None = None
+) -> DataFrame:
+    """Rows of ``df`` with ``after < offset_col <= upto`` (an omitted
+    bound is open); a row whose offset is NULL is never in range.
+
+    Shared by both runners' per-epoch filters. Spark writes a numeric
+    literal into the generated Java, so a plain ``offset <= upto``
+    compiles new classes for every new bound. Each bound here is a
+    one-field struct literal compared with ``struct(offset_col)``: a
+    struct literal reaches the generated code as a referenced object,
+    so one compiled plan serves every epoch. Struct order puts NULL
+    first (``struct(NULL) <= struct(5)`` holds where ``NULL <= 5`` does
+    not), hence the explicit NOT NULL. The cost: a struct comparison is
+    not pushed down to the parquet reader, so row groups outside the
+    range are decoded and then filtered instead of skipped by their
+    min/max statistics."""
+    col = F.col(offset_col)
+    dtype = df.schema[offset_col].dataType
+    key = F.struct(col.alias(offset_col))
+
+    def bound(v: int):
+        return F.struct(F.lit(v).cast(dtype).alias(offset_col))
+
+    cond = col.isNotNull()
+    if after is not None:
+        cond &= key > bound(after)
+    if upto is not None:
+        cond &= key <= bound(upto)
+    return df.filter(cond)
+
+
 class IncrementalRunner:
     """Materialize ``view_fn(events ≤ offsets)`` into ``table`` batch by
     batch with exactly-once resume from the sink's offsets table.
@@ -129,7 +161,7 @@ class IncrementalRunner:
         return self.sink.read_offsets(self.spec).get(self.source_name, -1)
 
     def _bounded(self, events: DataFrame, upto: int) -> DataFrame:
-        df = events.filter(F.col(self.offset_col) <= upto)
+        df = offset_range(events, self.offset_col, upto=upto)
         if self.lookback_filter is not None:
             df = df.filter(self.lookback_filter)
         return df
@@ -160,7 +192,7 @@ class IncrementalRunner:
         /root/reference/examples/machine-dashboard/main.rs:44). Returns
         the per-batch applied delta counts."""
         start = self.resume_offset()
-        pending = events.filter(F.col(self.offset_col) > start).select(self.offset_col)
+        pending = offset_range(events, self.offset_col, after=start).select(self.offset_col)
         bounds = batch_bounds(pending, self.offset_col, events_per_txn)
         return [self.run_batch(events, b) for b in bounds]
 
@@ -171,7 +203,7 @@ class IncrementalAggRunner(IncrementalRunner):
     common) algebraic-aggregate case, where the base class recomputes
     and diffs.
 
-    Per epoch: only the NEW events (offset in (resume, upto]) are read,
+    Per epoch: only the NEW events (offset in (resume, upto]) are kept,
     lifted to +1 deltas, and folded into the running aggregate with
     ``delta.delta_agg_sum`` — emitting the reference's retraction pairs
     for exactly the touched keys. The epoch commits through the same
@@ -184,10 +216,11 @@ class IncrementalAggRunner(IncrementalRunner):
     point and ``catch_up`` loop are the base class's.
 
     Scale: epoch cost is one churn-sized aggregate + one equi-join
-    against the old aggregate's touched keys — independent of history
-    length, where recompute-from-log grows with the prefix. Restriction:
-    the view must be keys + SUM (+count); non-algebraic views stay on
-    the recompute path.
+    against the old aggregate's touched keys, where recompute-from-log
+    aggregates the whole prefix. The log scan under it is not pruned to
+    the epoch (``offset_range``): it decodes the frame it is given and
+    filters. Restriction: the view must be keys + SUM (+count);
+    non-algebraic views stay on the recompute path.
 
     ``prepare`` maps the raw event frame to (keys…, val) rows (filter +
     project); ``table`` declares columns (keys…, out, _n).
@@ -222,9 +255,7 @@ class IncrementalAggRunner(IncrementalRunner):
         if upto <= start:
             return 0
         [(table, prepare)] = self.views
-        pending = events.filter(
-            (F.col(self.offset_col) > start) & (F.col(self.offset_col) <= upto)
-        )
+        pending = offset_range(events, self.offset_col, after=start, upto=upto)
         prepared = prepare(pending).select(*self.keys, self.val_col)
         schema = prepared.groupBy(*self.keys).agg(
             F.sum(self.val_col).alias(self.out_col), F.count(F.lit(1)).alias("_n")

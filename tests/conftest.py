@@ -12,6 +12,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def spark():
     from pyspark.sql import SparkSession
 
+    from actyxos_data_flow_spark.session import CODEGEN_CACHE_MAX_ENTRIES
+
     s = (
         SparkSession.builder.master("local[4]")
         .appName("tests")
@@ -19,6 +21,7 @@ def spark():
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
         .getOrCreate()
     )
     s.sparkContext.setLogLevel("ERROR")

@@ -2,8 +2,9 @@
 mirror write or at the sink commit leaves the committed state intact
 and the retry lands exactly where a crash-free run does; each epoch
 evaluates its view (recompute runner) or its prepared input (aggregate
-runner) once; and over random logs and epoch cuts both runners' sink
-rows equal the view over the whole log.
+runner) once; after a warm-up epoch, further epochs compile no new
+code and run as many jobs; and over random logs and epoch cuts both
+runners' sink rows equal the view over the whole log.
 """
 
 from __future__ import annotations
@@ -17,7 +18,7 @@ from hypothesis import strategies as st
 
 from actyxos_data_flow_spark.sinks import DbColumn, DbTable, SqliteSink
 from actyxos_data_flow_spark.streaming import IncrementalRunner
-from actyxos_data_flow_spark.streaming.runner import IncrementalAggRunner
+from actyxos_data_flow_spark.streaming.runner import IncrementalAggRunner, offset_range
 
 TABLE = DbTable(
     "ivm_totals",
@@ -139,6 +140,67 @@ def test_each_epoch_evaluates_its_input_once(spark, events, tmp_path, kind):
         tuple(r) for r in totals(events.filter(F.col("event_id") <= 39)).collect()
     )
     sink.close()
+
+
+def compiles_and_jobs(spark, group, fn):
+    """(classes Spark's code generator compiled, Spark jobs run) while
+    ``fn()`` runs."""
+    sc = spark.sparkContext
+    codegen = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    sc.setJobGroup(group, group)
+    before = codegen.getCount()
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return codegen.getCount() - before, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("kind", RUNNERS)
+def test_epochs_after_warm_up_compile_nothing(spark, tmp_path, kind):
+    """The epoch's offset bounds stay out of generated code: after one
+    warm-up epoch, the next two compile 0 classes and run as many jobs.
+    A row whose offset is NULL is in no epoch."""
+    events = spark.createDataFrame(
+        [(i, f"k{i % 4}", i % 7) for i in range(60)] + [(None, "k0", 100)],
+        "event_id long, k string, v long",
+    )
+    sink = SqliteSink(":memory:")
+    runner = make_runner(kind, spark, sink, str(tmp_path / "mirror"))
+    runner.run_batch(events, 14)  # the first epoch has no previous snapshot
+    counts = []
+    for upto in (29, 44, 59):
+        counts.append(
+            compiles_and_jobs(spark, f"epoch-{kind}-{upto}", lambda: runner.run_batch(events, upto))
+        )
+        want = totals(events.filter(F.col("event_id") <= upto)).collect()
+        assert sorted(sink.rows(TABLE)) == sorted(tuple(r) for r in want)
+    (_, warm_jobs), *after = counts
+    assert warm_jobs > 0
+    assert after == [(0, warm_jobs)] * 2
+    sink.close()
+
+
+@pytest.mark.parametrize(
+    "bounds", [("after",), ("upto",), ("after", "upto")], ids=["after", "upto", "both"]
+)
+def test_offset_range_compiles_once_per_shape(spark, bounds):
+    """``offset_range`` keeps ``after < offset <= upto`` and drops NULL
+    offsets; a new bound reuses the code compiled for the last one."""
+    df = spark.createDataFrame(
+        [(i if i % 10 else None, i % 3) for i in range(100)], "event_id int, k long"
+    )
+    new = []
+    for after, upto in ((-5, 30), (25, 60), (59, 95)):
+        kw = {k: v for k, v in (("after", after), ("upto", upto)) if k in bounds}
+        got = offset_range(df, "event_id", **kw)
+        n, _ = compiles_and_jobs(
+            spark, f"range-{bounds}-{upto}", lambda: got.groupBy("k").count().collect()
+        )
+        new.append(n)
+        want = [i for i in range(100) if i % 10 and kw.get("after", -1) < i <= kw.get("upto", 99)]
+        assert sorted(r.event_id for r in got.collect()) == want
+    assert new[1:] == [0, 0]
 
 
 @settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.too_slow])

@@ -494,6 +494,8 @@ def test_corpus_ingestor_dedups_within_and_across_batches(spark, tmp_path):
     s2 = ing.ingest_batch(b2)
     assert s2["accepted"] == 1  # only the new doc
     corpus = ing.corpus()
+    # the caller's columns only: the gate's quality_fp6 is not stored
+    assert corpus.columns == ["doc_id", "text", "lang", "source"]
     texts = [r.text for r in corpus.collect()]
     assert sorted(texts) == sorted([good_a, good_b, good_c])
     assert corpus.select("doc_id").distinct().count() == 3
