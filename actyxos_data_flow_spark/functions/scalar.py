@@ -85,5 +85,7 @@ def ns_micros(col: Column | str) -> Column:
     DuckDB's ``epoch_us`` truncation for post-1970 data."""
     c = F.col(col) if isinstance(col, str) else col
     # NOT (c / 1000).cast: long/int division goes through DOUBLE, which
-    # cannot represent ~1.7e18 ns exactly. Decimal division is exact.
-    return F.floor(c.cast("decimal(38,0)") / F.lit(1000)).cast("long")
+    # cannot represent ~1.7e18 ns exactly. ``div`` is exact long division
+    # truncating toward zero; a negative remainder steps it down to the
+    # floor. Neither can overflow, and no decimal cast is paid per row.
+    return F.call_function("div", c, F.lit(1000)) - (c % 1000 < 0).cast("long")

@@ -1,11 +1,15 @@
 """Spark ↔ sink glue: turn delta DataFrames into sink batches and close
-the IVM loop (view recompute → distributed snapshot diff → transactional
+the IVM loop (view recompute or fold → distributed delta → transactional
 apply).
 
 Scale design: the previous committed snapshot of every table lives as a
 **parquet mirror** on shared storage, so the per-epoch diff is a
 distributed union + aggregate over two Spark-readable snapshots —
-O(|view|) cluster work, O(churn) driver traffic. Only the NET delta
+O(|view|) cluster work, O(churn) driver traffic. For a fold view
+(``streaming/fold.py``) the mirror holds the view's state instead, which
+may carry columns the sink does not hold (an order column, the last row
+per key): the next state is folded from it and the epoch's churn, and
+the delta is derived from the two states. Only the NET delta
 (which scales with the view's churn, not with the input — K2
 consolidation runs distributed first) is collected for the single-writer
 store, matching the reference's topology of shipping consolidated
@@ -40,7 +44,7 @@ from __future__ import annotations
 
 import os
 import shutil
-from collections.abc import Mapping, Sequence
+from collections.abc import Callable, Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -78,22 +82,28 @@ class SnapshotMirror:
     def read(self, table: DbTable, epoch: str, schema) -> DataFrame:
         return self.spark.read.schema(schema).parquet(self._dir(table, epoch))
 
-    def read_previous(self, sink: DbapiSink, table: DbTable, schema) -> DataFrame:
-        """The snapshot the sink's rows currently reflect, as a
-        DataFrame. Empty if nothing committed yet; rebuilt from the sink
-        (recovery path) if the pointer names a missing directory."""
+    def read_previous(
+        self,
+        sink: DbapiSink,
+        table: DbTable,
+        schema,
+        rebuild: Callable[[], DataFrame] | None = None,
+    ) -> DataFrame:
+        """The snapshot (or fold state) the sink's rows currently
+        reflect, as a DataFrame. When no committed directory can be read
+        (nothing committed yet, a sink that predates the mirror, or a
+        lost directory) it is ``rebuild()``, by default the sink's rows
+        (a full scan; empty if nothing is committed)."""
+        if rebuild is None:
+            def rebuild():
+                return self.spark.createDataFrame(sink.rows(table), schema=schema)
         epoch = sink.mirror_epoch(table.name)
         if epoch is None:
-            rows = sink.rows(table)  # fetched once — this is a full scan
-            if rows:
-                # sink predates the mirror (or mirror state was cleared):
-                # one-time rebuild from stored rows.
-                return self.spark.createDataFrame(rows, schema=schema)
-            return self.spark.createDataFrame([], schema=schema)
+            return rebuild()
         try:
             return self.read(table, epoch, schema)
         except Exception:  # noqa: BLE001 — dir lost: recovery rebuild
-            return self.spark.createDataFrame(sink.rows(table), schema=schema)
+            return rebuild()
 
     def write(self, table: DbTable, snapshot: DataFrame, epoch: str) -> None:
         snapshot.write.mode("overwrite").parquet(self._dir(table, epoch))
@@ -133,6 +143,7 @@ def write_snapshots(
     conn_factory=None,
     distributed_threshold: int = DISTRIBUTED_DELTA_THRESHOLD,
     deltas: Mapping[str, DataFrame] | None = None,
+    folds: Mapping[str, Callable[[DataFrame], DataFrame]] | None = None,
 ) -> dict[str, int]:
     """Materialize several snapshots (one input stream → up to N record
     types, /root/reference/src/db/mod.rs:230-244) in ONE transaction
@@ -146,9 +157,12 @@ def write_snapshots(
     A table named in ``deltas`` instead ships the consolidated delta it
     is given (true IVM, e.g. ``delta.delta_agg_sum``), and its snapshot
     (e.g. ``delta.delta_agg_next`` of that delta) is written after the
-    delta ships. A single sink transaction applies every delta + offsets
-    + the mirror pointers, then superseded directories are pruned.
-    Idempotent.
+    delta ships. A table named in ``folds`` is given a fold state
+    (``streaming/fold.py``), which may carry columns the sink does not
+    hold: the whole state is written, and ``folds[name]`` of the parquet
+    just written is the delta shipped. A single sink transaction applies
+    every delta + offsets + the mirror pointers, then superseded
+    directories are pruned. Idempotent.
 
     Delta shipping has two topologies:
 
@@ -171,15 +185,20 @@ def write_snapshots(
     of the diff, never the log. Without either, the driver-side path
     applies unconditionally."""
     epoch = _epoch_key(offsets)
-    given = deltas or {}
+    given, folds = deltas or {}, folds or {}
     mirror_epochs: dict[str, str] = {}
     shipped: list[tuple[DbTable, DataFrame]] = []
     derived: list[tuple[DbTable, DataFrame]] = []
     for table, new_snapshot in views:
-        new = new_snapshot.select(*[c.name for c in table.written_columns])
         # never write over the directory the committed pointer names
         written = f"{epoch}.alt" if sink.mirror_epoch(table.name) == epoch else epoch
         mirror_epochs[table.name] = written
+        if table.name in folds:
+            mirror.write(table, new_snapshot, written)
+            state = mirror.read(table, written, new_snapshot.schema)
+            shipped.append((table, folds[table.name](state)))
+            continue
+        new = new_snapshot.select(*[c.name for c in table.written_columns])
         if table.name in given:
             shipped.append((table, given[table.name]))
             derived.append((table, new))

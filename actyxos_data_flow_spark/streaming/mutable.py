@@ -97,21 +97,22 @@ class _TombstoneStore:
             .drop("_upto")
         )
 
-    def _append_tombstones(self, ids: DataFrame, id_field: str) -> int:
+    @staticmethod
+    def _pinned_ids(ids: DataFrame, id_field: str) -> DataFrame:
+        """The distinct ids to retract, as ``tomb_id``, pinned once: the
+        tombstone count, its write and the cluster relabel must all see
+        the SAME id set, even when ``ids`` is a lazy plan over the very
+        stores the tombstones hide rows from (``upsert_batch``)."""
+        return ids.select(F.col(id_field).cast("long").alias("tomb_id")).distinct().localCheckpoint()
+
+    def _append_tombstones(self, pinned: DataFrame) -> int:
         """One atomic visibility switch: every reader consults this
-        table, so a single committed write retracts the ids everywhere."""
-        # localCheckpoint: the count below and the write after it must see
-        # the SAME id set even when ``ids`` is a lazy plan over the very
-        # stores this write hides rows from.
-        t = (
-            ids.select(F.col(id_field).cast("long").alias("tomb_id"))
-            .distinct()
-            .localCheckpoint()
-        )
-        n = t.count()
+        table, so a single committed write retracts the ``pinned`` ids
+        (:meth:`_pinned_ids`) everywhere."""
+        n = pinned.count()
         if n:
             self._stores.write(
-                "tombstones", t.withColumn("upto_seq", F.lit(self._stores.seq).cast("long"))
+                "tombstones", pinned.withColumn("upto_seq", F.lit(self._stores.seq).cast("long"))
             )
         return n
 
@@ -179,16 +180,9 @@ class MutableCorpusIngestor(_TombstoneStore, CorpusIngestor):
         index, edge set), and cluster labels are recomputed for the
         affected components only — both commit in one batch. Idempotent
         on replay."""
-        # Pin the id set BEFORE the tombstones are written: callers
-        # (upsert_batch) pass plans derived from the stores this method
-        # MUTATES, and the relabel must see the same ids as the tombstones.
-        ids = (
-            removed_ids.select(F.col(self.id_col).cast("long").alias("doc_id"))
-            .distinct()
-            .localCheckpoint()
-        )
+        ids = self._pinned_ids(removed_ids, self.id_col)
         with self._stores.batch():
-            n = self._append_tombstones(ids, "doc_id")
+            n = self._append_tombstones(ids)
             relabeled = self._relabel_after_retract(ids) if n else 0
         return {"retracted": n, "relabeled_components": relabeled}
 
@@ -196,11 +190,14 @@ class MutableCorpusIngestor(_TombstoneStore, CorpusIngestor):
         """Deleting nodes can SPLIT a component — un-mergeable
         incrementally — so recompute CC on the surviving edges of the
         components that contained removed nodes; every other
-        component's labels are kept verbatim."""
-        labels = self.clusters()
-        if labels.limit(1).count() == 0:
+        component's labels are kept verbatim. ``removed`` holds the
+        pinned ``tomb_id`` set."""
+        # no labeling committed (always so without near_dup): nothing to
+        # split, and the pointer says so without a Spark job
+        if "clusters" not in self._stores.committed()["stores"]:
             return 0
-        rm = removed.select(F.col("doc_id").alias("node"))
+        labels = self.clusters()
+        rm = removed.select(F.col("tomb_id").alias("node"))
         hit = labels.join(rm, "node", "left_semi").select("component").distinct()
         n_hit = hit.count()
         if n_hit == 0:
@@ -244,8 +241,9 @@ class MutableVectorIngestor(_TombstoneStore, VectorIngestor):
         self._stamped({"vectors": self.id_col, "hsigs": self.id_col, "digests": self.id_col})
 
     def retract_batch(self, removed_ids: DataFrame) -> dict:
+        ids = self._pinned_ids(removed_ids, self.id_col)
         with self._stores.batch():
-            return {"retracted": self._append_tombstones(removed_ids, self.id_col)}
+            return {"retracted": self._append_tombstones(ids)}
 
     def compact(self) -> None:
         """Reclaim retracted vectors: rewrite the three stores to their

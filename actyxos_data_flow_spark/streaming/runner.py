@@ -6,16 +6,25 @@ the accumulated deltas are shipped to the DB in one transaction with
 the offsets they reflect; on restart the stored offsets bound what to
 skip. Our epoch = one offset-bounded prefix of the log. One epoch
 loop (:class:`IncrementalRunner`: resume point, batch bounds, mirror)
-and one commit path (``sinks/writer.write_snapshots``) serve two ways
-of getting an epoch's delta: recompute the view on the prefix and diff
-against the previous snapshot's parquet mirror (distributed), or, in
-:class:`IncrementalAggRunner`, fold only the epoch's new events into a
-grouped SUM and hand that delta to the same commit. The reference's
+and one commit path (``sinks/writer.write_snapshots``) serve three ways
+of getting an epoch's delta:
+
+- a plain view function is recomputed on the prefix and diffed against
+  the previous snapshot's parquet mirror (distributed);
+- a fold view (``streaming/fold.py``) keeps its state in the mirror
+  instead of a snapshot, folds only the epoch's new events into it and
+  derives the delta from the two states;
+- :class:`IncrementalAggRunner` folds only the epoch's new events into a
+  grouped SUM and hands that delta to the same commit.
+
+The reference's
 ``Stateless``/``Stateful`` marker (/root/reference/src/flow.rs:160-177)
 decides whether restart must replay history; recompute-from-log
-subsumes replay, and bounded look-back (``Flow::new_limited``,
+subsumes replay (a fold view whose state is lost rebuilds it from the
+log), and bounded look-back (``Flow::new_limited``,
 /root/reference/src/flow.rs:103-123) becomes a source-side timestamp
-filter.
+filter, for recomputed views only: a fold state keeps contributions
+older than any horizon.
 
 The runner also carries the reference's multi-table Union contract
 (/root/reference/src/db/mod.rs:230-244, 273-458): several views over
@@ -28,6 +37,7 @@ from __future__ import annotations
 import math
 import tempfile
 from collections.abc import Callable, Sequence
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,6 +45,7 @@ from pyspark.sql import functions as F
 from ..delta import delta_agg_next, delta_agg_sum, with_delta
 from ..sinks import DbapiSink, DbTable, Union
 from ..sinks.writer import SnapshotMirror, write_snapshots
+from .fold import FoldView
 
 ViewFn = Callable[[DataFrame], DataFrame]
 
@@ -126,6 +137,14 @@ class IncrementalRunner:
             if table is None or view_fn is None:
                 raise ValueError("pass (table, view_fn) or views=[...]")
             views = [(table, view_fn)]
+        for _, fn in views:
+            if isinstance(fn, FoldView):
+                if lookback_filter is not None:
+                    raise ValueError(
+                        "a fold view keeps contributions older than any look-back "
+                        "horizon: lookback_filter cannot apply to it"
+                    )
+                fn.check(offset_col)
         self.spark = spark
         self.sink = sink
         self.views = list(views)
@@ -167,24 +186,58 @@ class IncrementalRunner:
         return df
 
     def run_batch(self, events: DataFrame, upto: int) -> int:
-        """One epoch: recompute all views on the prefix ≤ upto, apply the
-        net deltas + offsets in one transaction. Idempotent (retry ⇒
-        empty diff). Returns total delta rows applied."""
+        """One epoch: bring all views to the prefix ≤ upto, apply the net
+        deltas + offsets in one transaction. Idempotent (retry ⇒ empty
+        delta). Returns total delta rows applied."""
         return self.commit_prefix(self._bounded(events, upto), upto)
 
     def commit_prefix(self, prefix: DataFrame, upto: int) -> int:
         """One epoch over a frame that already is the log prefix ≤ upto
-        (the structured handler's staged log): no offset filter is added,
+        (the structured handler's staged log). A plain view is
+        recomputed on ``prefix`` and diffed; a :class:`FoldView` folds
+        the churn, ``prefix`` restricted to offsets after the sink's
+        resume point, into its state. No literal offset filter is added,
         so the plan does not change from one epoch to the next."""
+        start = self.resume_offset()
+        if upto < start and any(isinstance(fn, FoldView) for _, fn in self.views):
+            raise ValueError(f"a fold view cannot rewind from offset {start} to {upto}")
+        snapshots: list[tuple[DbTable, DataFrame]] = []
+        folds: dict[str, Callable[[DataFrame], DataFrame]] = {}
+        for table, fn in self.views:
+            if isinstance(fn, FoldView):
+                old, new = self._fold(table, fn, prefix, start)
+                snapshots.append((table, new))
+                folds[table.name] = partial(fn.delta, old)
+            else:
+                snapshots.append((table, fn(prefix)))
         applied = write_snapshots(
             self.spark,
             self.sink,
-            [(t, fn(prefix)) for t, fn in self.views],
+            snapshots,
             {self.source_name: upto},
             self.mirror,
             offsets_table=self.spec.offsets_table,
+            folds=folds,
         )
         return sum(applied.values())
+
+    def _fold(
+        self, table: DbTable, fold: FoldView, prefix: DataFrame, start: int
+    ) -> tuple[DataFrame, DataFrame]:
+        """(committed state, next state) of one fold view. A missing
+        state (lost directory, or a sink that predates the mirror) is
+        rebuilt by folding the log ≤ start from nothing: sink rows
+        cannot rebuild a frontier."""
+        rows = fold.prepare(offset_range(prefix, self.offset_col, after=start))
+        schema = fold.step(None, rows).schema
+
+        def rebuild() -> DataFrame:
+            if start < 0:
+                return self.spark.createDataFrame([], schema)
+            return fold.step(None, fold.prepare(offset_range(prefix, self.offset_col, upto=start)))
+
+        old = self.mirror.read_previous(self.sink, table, schema, rebuild=rebuild)
+        return old, fold.step(old, rows)
 
     def catch_up(self, events: DataFrame, events_per_txn: int = 1000) -> list[int]:
         """Process everything beyond the stored offsets in commit units

@@ -2,7 +2,9 @@
 
 Mirrors /root/reference/examples/machine-dashboard (logic.rs:6-30
 filter → map enum→row → group_by(machine).max_by(since); main.rs wires
-it to a SQLite mirror). Transposition (plans/reference.py e1_dashboard):
+it to a SQLite mirror), as a fold view: ``build_view(events)``
+recomputes it, and an ``IncrementalRunner`` folds each epoch's new
+events into the latest row per machine. Transposition (plans/reference.py e1_dashboard):
 user_id = machine, event_type = payload discriminator, event_id =
 lamport. Run: python examples/machine_dashboard.py [sf_dir] [db]"""
 
@@ -17,6 +19,7 @@ from pyspark.sql import functions as F
 from actyxos_data_flow_spark.flow import Flow
 from actyxos_data_flow_spark.functions.scalar import ns_micros
 from actyxos_data_flow_spark.sinks import DbColumn, DbTable
+from actyxos_data_flow_spark.streaming.fold import LatestByKey
 
 TABLE = DbTable(
     name="machine_status",
@@ -30,8 +33,8 @@ TABLE = DbTable(
 )
 
 
-def build_view(events):
-    flow = (
+def _prepare(events):
+    return (
         Flow.source(events)
         .filter(F.col("event_type") != "error")
         .map(
@@ -41,10 +44,13 @@ def build_view(events):
             ns_micros("ts").alias("since_micros"),
             F.col("event_id"),
         )
-        .group_by("user_id")
-        .max_by("event_id")
+        .df
     )
-    return flow.df.drop("event_id")
+
+
+# group_by(user_id).max_by(event_id), without the event_id column; an
+# incremental runner folds each epoch's events into the kept snapshot
+build_view = LatestByKey(_prepare, keys=["user_id"], order="event_id")
 
 
 if __name__ == "__main__":

@@ -179,3 +179,17 @@ def test_env_fingerprint_mask_drops_named_bit_on_divergence(monkeypatch, spark):
     idx = [n for n, _ in E._SENTINELS].index("sqrt_2")
     expect = ((1 << len(E._SENTINELS)) - 1) & ~(1 << idx)
     assert E.env_fingerprint_spark(spark, "").count() == expect
+
+
+def test_ns_micros_is_exact_floor_division(spark):
+    """``ns_micros`` is ``floor(ns / 1000)`` on every long, with no
+    decimal cast: both signs of every remainder boundary, values past
+    double precision, the long extremes and NULL."""
+    from actyxos_data_flow_spark.functions.scalar import ns_micros
+
+    big = 1_700_000_000_123_456_789
+    edges = [0, 1, 999, 1000, 1001, big, 2**63 - 1]
+    vals = [s * v for v in edges for s in (1, -1)] + [-(2**63), None]
+    df = spark.createDataFrame([(v,) for v in vals], "ns long")
+    got = [r.us for r in df.select(ns_micros("ns").alias("us")).collect()]
+    assert got == [None if v is None else v // 1000 for v in vals]

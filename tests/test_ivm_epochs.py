@@ -1,23 +1,29 @@
-"""Per-epoch contract of both incremental runners: a crash at the
-mirror write or at the sink commit leaves the committed state intact
-and the retry lands exactly where a crash-free run does; each epoch
-evaluates its view (recompute runner) or its prepared input (aggregate
-runner) once; after a warm-up epoch, further epochs compile no new
-code and run as many jobs; and over random logs and epoch cuts both
-runners' sink rows equal the view over the whole log.
+"""Per-epoch contract of the incremental runners — recompute-and-diff,
+fold views and the aggregate runner: a crash at the mirror write or at
+the sink commit leaves the committed state intact and the retry lands
+exactly where a crash-free run does; each epoch evaluates its view
+(recompute) or its prepared input (fold, aggregate) once; after a
+warm-up epoch, further epochs compile no new code and run as many jobs;
+over random logs and epoch cuts the runners' sink rows equal the view
+over the whole log, and a fold view's equal its recompute's after every
+epoch; a lost fold state is rebuilt from the log.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 import pyspark.sql.functions as F
 import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
+from pyspark.sql import Window as W
+
 from actyxos_data_flow_spark.sinks import DbColumn, DbTable, SqliteSink
 from actyxos_data_flow_spark.streaming import IncrementalRunner
+from actyxos_data_flow_spark.streaming.fold import LatestByKey, PairWithPrevious
 from actyxos_data_flow_spark.streaming.runner import IncrementalAggRunner, offset_range
 
 TABLE = DbTable(
@@ -25,7 +31,7 @@ TABLE = DbTable(
     (DbColumn("k", "text"), DbColumn("total", "bigint"), DbColumn("_n", "bigint")),
     version=1,
 )
-RUNNERS = ("recompute", "delta_agg")
+RUNNERS = ("recompute", "delta_agg", "fold")
 
 
 @pytest.fixture(scope="module")
@@ -39,14 +45,35 @@ def totals(df):
     return df.groupBy("k").agg(F.sum("v").alias("total"), F.count(F.lit(1)).alias("_n"))
 
 
+def latest(df):
+    """Each key's ``v`` at its highest offset, and that offset: the fold
+    kind's view, stated in plain Spark."""
+    w = W.partitionBy("k").orderBy(F.col("event_id").desc())
+    return (
+        df.withColumn("_r", F.row_number().over(w))
+        .filter("_r = 1")
+        .select("k", F.col("v").alias("total"), F.col("event_id").alias("_n"))
+    )
+
+
+EXPECTED = {"recompute": totals, "delta_agg": totals, "fold": latest}
+
+
 def make_runner(kind, spark, sink, mirror_dir, key=None):
-    """A runner keeping ``totals`` of the events; ``key`` (a column for
-    ``k``) runs inside the view or inside ``prepare``."""
+    """A runner keeping ``EXPECTED[kind]`` of the events; ``key`` (a
+    column for ``k``) runs inside the view or inside ``prepare``."""
     k = F.col("k") if key is None else key.alias("k")
     if kind == "recompute":
         return IncrementalRunner(
             spark, sink, TABLE, lambda df: totals(df.select(k, "v")), mirror_dir=mirror_dir
         )
+    if kind == "fold":
+        view = LatestByKey(
+            lambda df: df.select(k, F.col("v").alias("total"), F.col("event_id").alias("_n"), "event_id"),
+            keys=["k"],
+            order="event_id",
+        )
+        return IncrementalRunner(spark, sink, TABLE, view, mirror_dir=mirror_dir)
     return IncrementalAggRunner(
         spark, sink, TABLE, ["k"], "v", "total",
         prepare=lambda df: df.select(k, "v"), mirror_dir=mirror_dir,
@@ -55,8 +82,8 @@ def make_runner(kind, spark, sink, mirror_dir, key=None):
 
 # where the first attempt of the second epoch dies, and the mirror
 # directories it leaves: inside the sink commit, after the new snapshot
-# is written, or inside SnapshotMirror.write, before it writes (the
-# aggregate runner has collected its delta by then)
+# (or fold state) is written, or inside SnapshotMirror.write, before it
+# writes (the aggregate runner has collected its delta by then)
 CRASH_POINTS = {"commit": ["events-19", "events-39"], "mirror_write": ["events-19"]}
 
 
@@ -117,9 +144,9 @@ def test_crash_after_mirror_write_then_retry(
 @pytest.mark.parametrize("kind", RUNNERS)
 def test_each_epoch_evaluates_its_input_once(spark, events, tmp_path, kind):
     """A Python UDF on the group key, in the view (recompute) or in
-    ``prepare`` (aggregate), counts the rows it sees: each source row of
-    an epoch passes it once — not once for the delta and again for the
-    mirror write, nor once for the retractions and again for the
+    ``prepare`` (fold, aggregate), counts the rows it sees: each source
+    row of an epoch passes it once — not once for the delta and again
+    for the mirror write, nor once for the retractions and again for the
     insertions."""
     seen = spark.sparkContext.accumulator(0)
 
@@ -133,11 +160,11 @@ def test_each_epoch_evaluates_its_input_once(spark, events, tmp_path, kind):
     runner.run_batch(events, 19)
     assert seen.value == 20
     runner.run_batch(events, 39)
-    # recompute reads the whole prefix (40 rows); the aggregate runner
-    # reads only the epoch's 20 new events
+    # recompute reads the whole prefix (40 rows); a fold and the
+    # aggregate runner read only the epoch's 20 new events
     assert seen.value == (60 if kind == "recompute" else 40)
     assert sorted(sink.rows(TABLE)) == sorted(
-        tuple(r) for r in totals(events.filter(F.col("event_id") <= 39)).collect()
+        tuple(r) for r in EXPECTED[kind](events.filter(F.col("event_id") <= 39)).collect()
     )
     sink.close()
 
@@ -173,7 +200,7 @@ def test_epochs_after_warm_up_compile_nothing(spark, tmp_path, kind):
         counts.append(
             compiles_and_jobs(spark, f"epoch-{kind}-{upto}", lambda: runner.run_batch(events, upto))
         )
-        want = totals(events.filter(F.col("event_id") <= upto)).collect()
+        want = EXPECTED[kind](events.filter(F.col("event_id") <= upto)).collect()
         assert sorted(sink.rows(TABLE)) == sorted(tuple(r) for r in want)
     (_, warm_jobs), *after = counts
     assert warm_jobs > 0
@@ -213,8 +240,9 @@ def test_offset_range_compiles_once_per_shape(spark, bounds):
 @pytest.mark.parametrize("kind", RUNNERS)
 def test_runners_equal_totals_over_random_epochs(spark, tmp_path_factory, kind, vals, nkeys, cuts):
     """Whatever the values (NULL included) and wherever the epochs are
-    cut, the sink ends on ``totals`` over the whole log. The pinned
-    example is an epoch that brings only a NULL to a non-NULL sum."""
+    cut, the sink ends on the runner's view over the whole log. The
+    pinned example is an epoch that brings only a NULL to a non-NULL
+    sum."""
     events = spark.createDataFrame(
         [(i, f"k{i % nkeys}", v) for i, v in enumerate(vals)], "event_id long, k string, v long"
     )
@@ -222,5 +250,162 @@ def test_runners_equal_totals_over_random_epochs(spark, tmp_path_factory, kind, 
     runner = make_runner(kind, spark, sink, str(tmp_path_factory.mktemp("mirror")))
     for upto in sorted({c for c in cuts if c < len(vals)} | {len(vals) - 1}):
         runner.run_batch(events, upto)
-    assert sorted(sink.rows(TABLE)) == sorted(tuple(r) for r in totals(events).collect())
+    assert sorted(sink.rows(TABLE)) == sorted(tuple(r) for r in EXPECTED[kind](events).collect())
     sink.close()
+
+
+# -- fold views against their own recompute ----------------------------------
+
+PAIR_TABLE = DbTable(
+    "fold_pairs",
+    (DbColumn("k", "text"), DbColumn("v0", "bigint"), DbColumn("v1", "bigint")),
+    version=1,
+)
+# each fold kind: (table, fold view). ``latest`` orders by ``ts``, which
+# ties; the pairings order by the offset, as they must. ``pair`` emits a
+# rise over the previous row; ``pair_opens`` a row v <= 0 right after an
+# opening row v > 0 (the machine-usage start/stop shape).
+FOLDS = {
+    "latest": (
+        DbTable("fold_latest", (DbColumn("k", "text"), DbColumn("v", "bigint")), version=1),
+        LatestByKey(lambda df: df.select("k", "v", "ts"), keys=["k"], order="ts"),
+    ),
+    "pair": (
+        PAIR_TABLE,
+        PairWithPrevious(
+            lambda df: df.select("k", "v", "event_id"), keys=["k"], order="event_id",
+            emit=["k", "prev_v AS v0", "v AS v1"],
+            where="prev_v < v",
+        ),
+    ),
+    "pair_opens": (
+        PAIR_TABLE,
+        PairWithPrevious(
+            lambda df: df.select("k", "v", "event_id"), keys=["k"], order="event_id",
+            emit=["k", "prev_v AS v0", "v AS v1"],
+            where="v <= 0",
+            opens="v > 0",
+        ),
+    ),
+}
+LOG_SCHEMA = "event_id long, k string, v long, ts long"
+
+
+def by_value(rows):
+    return sorted(rows, key=lambda t: tuple((v is None, str(v)) for v in t))
+
+
+def fold_and_recompute(spark, tmp_path, kinds, **kwargs):
+    """Two runners over the same fold views, each into its own sink:
+    one folds them, the other recomputes them as plain functions."""
+    views = [FOLDS[k] for k in kinds]
+    plain = [(t, lambda df, v=v: v(df)) for t, v in views]
+    out = []
+    for name, vs in (("fold", views), ("recompute", plain)):
+        sink = SqliteSink(":memory:")
+        out.append(IncrementalRunner(spark, sink, views=vs, mirror_dir=str(tmp_path / name), **kwargs))
+    return out
+
+
+@settings(max_examples=6, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@example(log=[("a", 1, 0), ("a", 1, 0), ("a", -1, 0)], null_offsets=set(), cuts=[0])
+@given(
+    log=st.lists(
+        st.tuples(st.none() | st.sampled_from("ab"), st.none() | st.integers(-2, 2), st.integers(0, 2)),
+        min_size=1,
+        max_size=10,
+    ),
+    null_offsets=st.sets(st.integers(0, 9), max_size=2),
+    cuts=st.lists(st.integers(0, 9), max_size=3),
+)
+@pytest.mark.parametrize("kind", list(FOLDS))
+def test_fold_equals_recompute_after_every_epoch(spark, tmp_path_factory, kind, log, null_offsets, cuts):
+    """Over random logs — NULL keys, NULL values, NULL offsets (in no
+    epoch), ties on ``latest``'s order column — and random epoch cuts,
+    the fold's sink rows equal the recompute's after every epoch."""
+    events = spark.createDataFrame(
+        [(None if i in null_offsets else i, k, v, ts) for i, (k, v, ts) in enumerate(log)], LOG_SCHEMA
+    )
+    fold, recompute = fold_and_recompute(spark, tmp_path_factory.mktemp("fold"), [kind])
+    table = FOLDS[kind][0]
+    for upto in sorted({c for c in cuts if c < len(log)} | {len(log) - 1}):
+        fold.run_batch(events, upto)
+        recompute.run_batch(events, upto)
+        assert by_value(fold.sink.rows(table)) == by_value(recompute.sink.rows(table)), upto
+    assert fold.run_batch(events, len(log) - 1) == 0
+
+
+def test_lost_fold_state_is_rebuilt_from_the_log(spark, tmp_path):
+    """Deleting the mirror between epochs loses every fold state; the
+    next epoch rebuilds it from the log ≤ its resume point, and the
+    results stay exact."""
+    events = spark.createDataFrame(
+        [(i, f"k{i % 3}", (i * 7) % 5 - 2, i % 4) for i in range(40)], LOG_SCHEMA
+    )
+    kinds = ["latest", "pair_opens"]
+    fold, recompute = fold_and_recompute(spark, tmp_path, kinds)
+    for upto in (9, 19, 29, 39):
+        if upto == 29:
+            for table, _ in fold.views:
+                assert os.listdir(tmp_path / "fold" / table.name)
+            shutil.rmtree(tmp_path / "fold")
+        fold.run_batch(events, upto)
+        recompute.run_batch(events, upto)
+        for table, _ in fold.views:
+            assert by_value(fold.sink.rows(table)) == by_value(recompute.sink.rows(table)), upto
+
+
+def test_commit_prefix_folds_only_the_churn(spark, tmp_path):
+    """The structured handler's entry point folds too: given the whole
+    staged prefix, ``prepare`` sees only the rows after the resume
+    point."""
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def counted(k):
+        seen.add(1)
+        return k
+
+    view = LatestByKey(lambda df: df.select(counted("k").alias("k"), "v", "ts"), keys=["k"], order="ts")
+    table = FOLDS["latest"][0]
+    sink = SqliteSink(":memory:")
+    runner = IncrementalRunner(spark, sink, table, view, mirror_dir=str(tmp_path / "m"))
+    log = spark.createDataFrame([(i, f"k{i % 3}", i % 5, i % 4) for i in range(30)], LOG_SCHEMA)
+    for upto in (9, 29):
+        runner.commit_prefix(log.filter(F.col("event_id") <= upto), upto)
+    assert seen.value == 30
+    want = view(log.select("k", "v", "ts")).collect()
+    assert by_value(sink.rows(table)) == by_value(tuple(r) for r in want)
+
+
+def test_fold_views_reject_what_they_cannot_fold(spark, tmp_path):
+    """A look-back horizon, a pairing not ordered by the offset, and a
+    rewind behind the committed offset are refused."""
+    sink = SqliteSink(":memory:")
+    table, latest_view = FOLDS["latest"]
+    with pytest.raises(ValueError, match="lookback_filter"):
+        IncrementalRunner(spark, sink, table, latest_view, lookback_filter=F.col("ts") > 0)
+    unordered = PairWithPrevious(
+        lambda df: df.select("k", "v", "ts"), keys=["k"], order="ts", emit=["k"], where="true"
+    )
+    with pytest.raises(ValueError, match="offset column"):
+        IncrementalRunner(spark, sink, PAIR_TABLE, unordered)
+    runner = IncrementalRunner(spark, sink, table, latest_view, mirror_dir=str(tmp_path / "m"))
+    events = spark.createDataFrame([(i, "a", i, i) for i in range(10)], LOG_SCHEMA)
+    runner.run_batch(events, 9)
+    with pytest.raises(ValueError, match="rewind"):
+        runner.run_batch(events, 4)
+
+
+def test_fold_epoch_runs_no_more_jobs_than_recompute(spark, tmp_path):
+    """Both fold kinds in one union: after two warm-up epochs, a fold
+    epoch runs at most as many Spark jobs as recomputing the same views."""
+    events = spark.createDataFrame(
+        [(i, f"k{i % 5}", (i * 3) % 7 - 3, i % 6) for i in range(80)], LOG_SCHEMA
+    )
+    jobs = {}
+    for runner, name in zip(fold_and_recompute(spark, tmp_path, ["latest", "pair_opens"]), ("fold", "recompute")):
+        runner.run_batch(events, 19)
+        runner.run_batch(events, 39)
+        _, jobs[name] = compiles_and_jobs(spark, f"jobs-{name}", lambda r=runner: r.run_batch(events, 59))
+    assert 0 < jobs["fold"] <= jobs["recompute"], jobs
