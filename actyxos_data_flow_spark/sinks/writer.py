@@ -9,7 +9,13 @@ O(|view|) cluster work, O(churn) driver traffic. For a fold view
 (``streaming/fold.py``) the mirror holds the view's state instead, which
 may carry columns the sink does not hold (an order column, the last row
 per key): the next state is folded from it and the epoch's churn, and
-the delta is derived from the two states. Only the NET delta
+the delta is derived from the two states. A fold state's directory name
+carries a tag of its schema (``<key>@<tag>``), and a snapshot's carries
+none: parquet read with a schema fills the columns its files lack with
+NULL and raises nothing, so a directory of another layout (a snapshot
+the view committed before it became a fold view, or the reverse) would
+otherwise read back as NULL rows. The reader takes only a directory of
+its own layout and rebuilds anything else. Only the NET delta
 (which scales with the view's churn, not with the input — K2
 consolidation runs distributed first) is collected for the single-writer
 store, matching the reference's topology of shipping consolidated
@@ -44,9 +50,11 @@ from __future__ import annotations
 
 import os
 import shutil
+import zlib
 from collections.abc import Callable, Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ..delta import DELTA_COL, snapshot_diff
 from .spec import DbTable
@@ -66,6 +74,19 @@ def _epoch_key(offsets: Mapping[str, int]) -> str:
     """Deterministic directory key for the offsets a snapshot reflects —
     a retried batch maps to the same epoch and overwrites its orphan."""
     return "_".join(f"{k}-{v}" for k, v in sorted(offsets.items())) or "empty"
+
+
+def state_tag(schema: StructType) -> str:
+    """The layout tag of a fold state with this schema, carried in the
+    name of the mirror directory it is written to."""
+    return f"{zlib.crc32(schema.simpleString().encode()):08x}"
+
+
+def _layout(epoch_dir: str) -> str:
+    """The state tag a mirror directory name carries ('' for a snapshot
+    of the sink's columns)."""
+    _, sep, tag = epoch_dir.removesuffix(".alt").rpartition("@")
+    return tag if sep else ""
 
 
 class SnapshotMirror:
@@ -89,16 +110,18 @@ class SnapshotMirror:
         schema,
         rebuild: Callable[[], DataFrame] | None = None,
     ) -> DataFrame:
-        """The snapshot (or fold state) the sink's rows currently
-        reflect, as a DataFrame. When no committed directory can be read
-        (nothing committed yet, a sink that predates the mirror, or a
-        lost directory) it is ``rebuild()``, by default the sink's rows
-        (a full scan; empty if nothing is committed)."""
+        """The snapshot (or, with ``rebuild`` given, the fold state) the
+        sink's rows currently reflect, as a DataFrame. When no committed
+        directory of that layout can be read (nothing committed yet, a
+        sink that predates the mirror, a lost directory, or one written
+        in the other layout) it is ``rebuild()``, by default the sink's
+        rows (a full scan; empty if nothing is committed)."""
+        layout = "" if rebuild is None else state_tag(schema)
         if rebuild is None:
             def rebuild():
                 return self.spark.createDataFrame(sink.rows(table), schema=schema)
         epoch = sink.mirror_epoch(table.name)
-        if epoch is None:
+        if epoch is None or _layout(epoch) != layout:
             return rebuild()
         try:
             return self.read(table, epoch, schema)
@@ -159,8 +182,9 @@ def write_snapshots(
     (e.g. ``delta.delta_agg_next`` of that delta) is written after the
     delta ships. A table named in ``folds`` is given a fold state
     (``streaming/fold.py``), which may carry columns the sink does not
-    hold: the whole state is written, and ``folds[name]`` of the parquet
-    just written is the delta shipped. A single sink transaction applies
+    hold: the whole state is written, to a directory tagged with its
+    layout, and ``folds[name]`` of the parquet just written is the delta
+    shipped. A single sink transaction applies
     every delta + offsets + the mirror pointers, then superseded
     directories are pruned. Idempotent.
 
@@ -190,8 +214,9 @@ def write_snapshots(
     shipped: list[tuple[DbTable, DataFrame]] = []
     derived: list[tuple[DbTable, DataFrame]] = []
     for table, new_snapshot in views:
+        base = f"{epoch}@{state_tag(new_snapshot.schema)}" if table.name in folds else epoch
         # never write over the directory the committed pointer names
-        written = f"{epoch}.alt" if sink.mirror_epoch(table.name) == epoch else epoch
+        written = f"{base}.alt" if sink.mirror_epoch(table.name) == base else base
         mirror_epochs[table.name] = written
         if table.name in folds:
             mirror.write(table, new_snapshot, written)

@@ -5,7 +5,7 @@ delta by recomputing the view over the whole log prefix and diffing it
 against the last snapshot. A :class:`FoldView` instead says how to fold
 the epoch's *churn*, the events with offset in ``(start, upto]``, into
 the view's state — the reference's stateful operators, which turn each
-batch of new events into deltas (/root/reference/src/flow.rs:129-146),
+batch of new events into deltas (the reference's src/flow.rs:129-146),
 and the keyed state of Structured Streaming's stateful operators. The
 runner keeps the state in its parquet mirror (``sinks/writer.py``),
 computes the next state from (old state, churn) only, and ships the
@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from collections.abc import Callable, Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -92,24 +92,20 @@ class LatestByKey(FoldView):
 ROW, OUT, NEW, LAST, PREV_OPENS = "_row", "_out", "_new", "_last", "_prev_opens"
 
 
-def _expr(c: Column | str) -> Column:
-    return F.expr(c) if isinstance(c, str) else c
-
-
 class PairWithPrevious(FoldView):
     """Pair each prepared row with the previous row of its key in
     ``order`` (the machine-usage ``lag`` pairing). Each row sees its own
     columns and ``prev_<c>`` for every non-key column ``c``; a row where
-    ``where`` holds emits the columns ``emit``. With ``opens`` given, a
-    row emits only if its previous row exists and satisfies ``opens``
-    (a start opens, a stop closes). Each of these may be a Column or a
-    SQL expression string; a string lets a view be declared before a
-    Spark session exists.
+    ``where`` holds, and whose previous row exists and satisfies
+    ``opens`` (a start opens, a stop closes), emits the columns
+    ``emit``. ``opens="true"`` pairs each row with any previous row.
+    ``emit``, ``where`` and ``opens`` are SQL expression strings, so a
+    view can be declared before a Spark session exists.
 
     The state holds the last prepared row per key (struct ``_row``) and
-    this epoch's emitted rows (struct ``_out``); with ``opens``, only a
-    last row that opens is kept, as a key whose last row does not open
-    can emit nothing with it — the reference's open-starts map. The
+    this epoch's emitted rows (struct ``_out``). Only a last row that
+    opens is kept, as a key whose last row does not open can emit
+    nothing with it — the reference's open-starts map. The
     next state runs the pairing over (the state's last rows ∪ churn),
     and only churn rows emit. The view is append-only, so an epoch's
     delta is its emitted rows as inserts — past pairs are never
@@ -121,9 +117,9 @@ class PairWithPrevious(FoldView):
         prepare: Prepare,
         keys: Sequence[str],
         order: str,
-        emit: Sequence[Column | str],
-        where: Column | str,
-        opens: Column | str | None = None,
+        emit: Sequence[str],
+        where: str,
+        opens: str,
     ):
         super().__init__(prepare, keys, order)
         self.emit = list(emit)
@@ -144,7 +140,7 @@ class PairWithPrevious(FoldView):
             last = state.where(F.col(ROW).isNotNull()).select(f"{ROW}.*")
             both = last.withColumn(NEW, F.lit(False)).unionByName(both)
         w = W.partitionBy(*self.keys).orderBy(self.order)
-        opens = F.lit(True) if self.opens is None else F.coalesce(_expr(self.opens), F.lit(False))
+        opens = F.coalesce(F.expr(self.opens), F.lit(False))
         paired = both.select(
             *cols,
             NEW,
@@ -153,12 +149,10 @@ class PairWithPrevious(FoldView):
             F.lag(opens).over(w).alias(PREV_OPENS),
             F.lead(F.lit(True)).over(w).isNull().alias(LAST),
         )
-        emits = F.col(NEW) & _expr(self.where)
-        if self.opens is not None:
-            emits &= F.coalesce(F.col(PREV_OPENS), F.lit(False))
+        emits = F.col(NEW) & F.expr(self.where) & F.coalesce(F.col(PREV_OPENS), F.lit(False))
         return paired.select(
             F.when(F.col(LAST) & F.col("_opens"), F.struct(*cols)).alias(ROW),
-            F.when(emits, F.struct(*map(_expr, self.emit))).alias(OUT),
+            F.when(emits, F.struct(*map(F.expr, self.emit))).alias(OUT),
         ).where(F.col(ROW).isNotNull() | F.col(OUT).isNotNull())
 
     def rows(self, state):

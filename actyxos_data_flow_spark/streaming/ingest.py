@@ -184,6 +184,11 @@ class _Stored:
     def _write(self, store: str, df: DataFrame) -> None:
         self._stores.write(store, df)
 
+    def _committed(self, store: str) -> bool:
+        """Whether any batch of ``store`` is committed — read from the
+        pointer, without a Spark job."""
+        return store in self._stores.committed()["stores"]
+
 
 def _cosine_ge(ea, eb, threshold: float):
     """cos(ea, eb) >= threshold as an EXACT integer comparison — the
@@ -404,8 +409,16 @@ class CorpusIngestor(_Stored):
                 .agg(F.min_by(rec, F.col(self.id_col)).alias("_rec"))
                 .select("_rec.*")
             )
-            # cross-history dedup: anti-join on the digest index only
-            fresh = in_batch.join(self._index(), "digest", "left_anti")
+            # cross-history dedup: anti-join on the digest index only.
+            # Without a committed index the join is skipped: adaptive
+            # execution drops a join against an empty side only once that
+            # side has run, so whether the other side's shuffle had already
+            # started — one more job and its shuffle — was left to timing
+            fresh = (
+                in_batch.join(self._index(), "digest", "left_anti")
+                if self._committed("digests")
+                else in_batch
+            )
             sigs = None
             near = None
             pre_gate = None
@@ -730,7 +743,12 @@ class VectorIngestor(_Stored):
                 .agg(F.min_by(rec, F.col(self.id_col)).alias("_rec"))
                 .select("_rec.*")
             )
-            fresh = in_batch.join(self._digests(), "digest", "left_anti").persist()
+            # no committed index: no anti-join (see the document gate)
+            fresh = (
+                in_batch.join(self._digests(), "digest", "left_anti")
+                if self._committed("digests")
+                else in_batch
+            ).persist()
             try:
                 # same materialization discipline as the document gate: the
                 # batch signatures and the verified pair set are each

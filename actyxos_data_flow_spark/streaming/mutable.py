@@ -194,7 +194,7 @@ class MutableCorpusIngestor(_TombstoneStore, CorpusIngestor):
         pinned ``tomb_id`` set."""
         # no labeling committed (always so without near_dup): nothing to
         # split, and the pointer says so without a Spark job
-        if "clusters" not in self._stores.committed()["stores"]:
+        if not self._committed("clusters"):
             return 0
         labels = self.clusters()
         rm = removed.select(F.col("tomb_id").alias("node"))

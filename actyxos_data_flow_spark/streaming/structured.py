@@ -5,8 +5,11 @@ Micro-batch = the reference's epoch (/root/reference/src/machine.rs:169-181):
 each trigger stages its batch into the log mirror (idempotently, keyed
 by batch_id — a retried batch overwrites its own directory) and hands
 the mirrored log, which is the prefix, to one :class:`~.runner.IncrementalRunner`:
-it recomputes the view(s) and applies the net delta + offsets in one
-sink transaction. This is the reference's offsets-in-transaction
+it recomputes or folds the view(s) and applies the net delta + offsets
+in one sink transaction. A fold view folds only the offsets after the
+committed one, so it needs the source to deliver offsets in order: a
+new micro-batch holding an offset at or below the committed one is
+refused (``ValueError``) rather than silently left out. This is the reference's offsets-in-transaction
 protocol (/root/reference/src/runner.rs:81-123) riding on Spark's
 replayable-source + idempotent-sink contract.
 
@@ -34,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..sinks import DbapiSink, DbTable
+from .fold import FoldView
 from .runner import IncrementalRunner, ViewFn
 
 
@@ -64,11 +68,22 @@ def _start(
         offset_col=offset_col, mirror_dir=mirror_dir,
     )
 
+    folds = any(isinstance(fn, FoldView) for _, fn in runner.views)
+
     def handle(batch_df: DataFrame, batch_id: int) -> None:
+        batch_dir = os.path.join(stage_dir, f"batch={batch_id}")
+        if folds and not os.path.exists(batch_dir):
+            # a fold view folds only offsets after the committed one: a
+            # new batch must lie after it (a retry may repeat its rows)
+            first = batch_df.agg(F.min(offset_col)).first()[0]
+            start = runner.resume_offset()
+            if first is not None and first <= start:
+                raise ValueError(
+                    f"micro-batch {batch_id} holds offset {first}, not after the "
+                    f"committed offset {start}: a fold view needs offset-ordered delivery"
+                )
         # idempotent stage: a retried batch rewrites its own directory
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(stage_dir, f"batch={batch_id}")
-        )
+        batch_df.write.mode("overwrite").parquet(batch_dir)
         log = spark.read.option("recursiveFileLookup", "true").parquet(stage_dir)
         upto = log.agg(F.max(offset_col)).first()[0]
         if upto is None:

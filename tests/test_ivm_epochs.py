@@ -6,11 +6,13 @@ exactly where a crash-free run does; each epoch evaluates its view
 warm-up epoch, further epochs compile no new code and run as many jobs;
 over random logs and epoch cuts the runners' sink rows equal the view
 over the whole log, and a fold view's equal its recompute's after every
-epoch; a lost fold state is rebuilt from the log.
+epoch; a lost fold state, or a mirror directory of another layout, is
+rebuilt from the log; a fold view refuses out-of-order micro-batches.
 """
 
 from __future__ import annotations
 
+import copy
 import os
 import shutil
 
@@ -22,7 +24,7 @@ from hypothesis import strategies as st
 from pyspark.sql import Window as W
 
 from actyxos_data_flow_spark.sinks import DbColumn, DbTable, SqliteSink
-from actyxos_data_flow_spark.streaming import IncrementalRunner
+from actyxos_data_flow_spark.streaming import IncrementalRunner, events_stream, run_available_now
 from actyxos_data_flow_spark.streaming.fold import LatestByKey, PairWithPrevious
 from actyxos_data_flow_spark.streaming.runner import IncrementalAggRunner, offset_range
 
@@ -87,6 +89,12 @@ def make_runner(kind, spark, sink, mirror_dir, key=None):
 CRASH_POINTS = {"commit": ["events-19", "events-39"], "mirror_write": ["events-19"]}
 
 
+def epoch_of(mirror_dir):
+    """The epoch key a mirror directory name carries, without the layout
+    tag a fold state's directory adds (``<key>@<tag>``)."""
+    return mirror_dir.partition("@")[0]
+
+
 @pytest.mark.parametrize(
     ("retry_upto", "crash_at"),
     [
@@ -126,8 +134,8 @@ def test_crash_after_mirror_write_then_retry(
     with pytest.raises(RuntimeError):
         runner.run_batch(events, 39)
     # the committed side is intact
-    assert sink.mirror_epoch(TABLE.name) == "events-19"
-    assert sorted(os.listdir(table_dir)) == CRASH_POINTS[crash_at]
+    assert epoch_of(sink.mirror_epoch(TABLE.name)) == "events-19"
+    assert sorted(map(epoch_of, os.listdir(table_dir))) == CRASH_POINTS[crash_at]
     assert sink.read_offsets(TABLE) == {"events": 19}
 
     assert runner.run_batch(events, retry_upto) > 0
@@ -262,20 +270,21 @@ PAIR_TABLE = DbTable(
     version=1,
 )
 # each fold kind: (table, fold view). ``latest`` orders by ``ts``, which
-# ties; the pairings order by the offset, as they must. ``pair`` emits a
-# rise over the previous row; ``pair_opens`` a row v <= 0 right after an
-# opening row v > 0 (the machine-usage start/stop shape).
+# ties; the pairings order by the offset, as they must. ``pair_opens_true``
+# emits a rise over any previous row; ``pair_opens`` a row v <= 0 right
+# after an opening row v > 0 (the machine-usage start/stop shape).
 FOLDS = {
     "latest": (
         DbTable("fold_latest", (DbColumn("k", "text"), DbColumn("v", "bigint")), version=1),
         LatestByKey(lambda df: df.select("k", "v", "ts"), keys=["k"], order="ts"),
     ),
-    "pair": (
+    "pair_opens_true": (
         PAIR_TABLE,
         PairWithPrevious(
             lambda df: df.select("k", "v", "event_id"), keys=["k"], order="event_id",
             emit=["k", "prev_v AS v0", "v AS v1"],
             where="prev_v < v",
+            opens="true",
         ),
     ),
     "pair_opens": (
@@ -355,10 +364,12 @@ def test_lost_fold_state_is_rebuilt_from_the_log(spark, tmp_path):
             assert by_value(fold.sink.rows(table)) == by_value(recompute.sink.rows(table)), upto
 
 
-def test_commit_prefix_folds_only_the_churn(spark, tmp_path):
+@pytest.mark.parametrize("kind", ["latest", "pair_opens"])
+def test_commit_prefix_folds_only_the_churn(spark, tmp_path, kind):
     """The structured handler's entry point folds too: given the whole
     staged prefix, ``prepare`` sees only the rows after the resume
-    point."""
+    point, so the second epoch reads the committed state instead of
+    rebuilding it."""
     seen = spark.sparkContext.accumulator(0)
 
     @F.udf("string")
@@ -366,16 +377,65 @@ def test_commit_prefix_folds_only_the_churn(spark, tmp_path):
         seen.add(1)
         return k
 
-    view = LatestByKey(lambda df: df.select(counted("k").alias("k"), "v", "ts"), keys=["k"], order="ts")
-    table = FOLDS["latest"][0]
+    table, fold = FOLDS[kind]
+    view = copy.copy(fold)
+    view.prepare = lambda df: fold.prepare(df.withColumn("k", counted("k")))
     sink = SqliteSink(":memory:")
     runner = IncrementalRunner(spark, sink, table, view, mirror_dir=str(tmp_path / "m"))
-    log = spark.createDataFrame([(i, f"k{i % 3}", i % 5, i % 4) for i in range(30)], LOG_SCHEMA)
+    log = spark.createDataFrame([(i, f"k{i % 3}", i % 5 - 2, i % 4) for i in range(30)], LOG_SCHEMA)
     for upto in (9, 29):
         runner.commit_prefix(log.filter(F.col("event_id") <= upto), upto)
     assert seen.value == 30
-    want = view(log.select("k", "v", "ts")).collect()
-    assert by_value(sink.rows(table)) == by_value(tuple(r) for r in want)
+    assert by_value(sink.rows(table)) == by_value(tuple(r) for r in fold(log).collect())
+
+
+def test_switching_between_plain_and_fold_view_rebuilds(spark, tmp_path):
+    """A table committed by a plain view and continued by its fold view
+    on the same mirror, and then by the plain view again: each switch
+    finds a mirror directory of the other layout, which would read back
+    as NULL columns, and rebuilds instead — every epoch stays exact."""
+    events = spark.createDataFrame(
+        [(i, f"k{i % 3}", (i * 7) % 5 - 2, i % 4) for i in range(40)], LOG_SCHEMA
+    )
+    kinds = ["latest", "pair_opens"]
+    fold, recompute = fold_and_recompute(spark, tmp_path, kinds)
+    sink = SqliteSink(":memory:")
+    mirror_dir = str(tmp_path / "switch")
+    for upto, runner in ((9, recompute), (19, fold), (29, fold), (39, recompute)):
+        switched = IncrementalRunner(spark, sink, views=runner.views, mirror_dir=mirror_dir)
+        switched.run_batch(events, upto)
+        recompute.run_batch(events, upto)
+        for table, _ in fold.views:
+            assert by_value(sink.rows(table)) == by_value(recompute.sink.rows(table)), upto
+
+
+def test_fold_view_refuses_out_of_order_micro_batches(spark, tmp_path):
+    """The structured handler feeds a fold view offset-ordered files
+    exactly; a later file holding offsets at or below the committed one
+    is refused rather than left out of the fold."""
+    table, view = FOLDS["pair_opens"]
+    log = spark.createDataFrame(
+        [(i, f"k{i % 3}", (i * 7) % 5 - 2, i % 4) for i in range(20)], LOG_SCHEMA
+    )
+
+    def drain(name, parts):
+        src = tmp_path / name / "src"
+        for n, (lo, hi) in enumerate(parts):
+            part = src / f"p{n}"
+            log.filter(F.col("event_id").between(lo, hi)).coalesce(1).write.parquet(str(part))
+            for f in os.listdir(part):  # the file source takes files by mtime
+                os.utime(part / f, (1_000_000 + n, 1_000_000 + n))
+        sink = SqliteSink(":memory:")
+        run_available_now(
+            spark, events_stream(spark, f"{src}/*", log.schema), [(table, view)], sink,
+            stage_dir=str(tmp_path / name / "stage"), checkpoint_dir=str(tmp_path / name / "ckpt"),
+        )
+        return sink
+
+    sink = drain("ordered", [(0, 9), (10, 19)])
+    assert by_value(sink.rows(table)) == by_value(tuple(r) for r in view(log).collect())
+    with pytest.raises(Exception, match="offset-ordered"):
+        drain("late", [(10, 19), (0, 9)])
 
 
 def test_fold_views_reject_what_they_cannot_fold(spark, tmp_path):
@@ -386,7 +446,8 @@ def test_fold_views_reject_what_they_cannot_fold(spark, tmp_path):
     with pytest.raises(ValueError, match="lookback_filter"):
         IncrementalRunner(spark, sink, table, latest_view, lookback_filter=F.col("ts") > 0)
     unordered = PairWithPrevious(
-        lambda df: df.select("k", "v", "ts"), keys=["k"], order="ts", emit=["k"], where="true"
+        lambda df: df.select("k", "v", "ts"), keys=["k"], order="ts", emit=["k"], where="true",
+        opens="true",
     )
     with pytest.raises(ValueError, match="offset column"):
         IncrementalRunner(spark, sink, PAIR_TABLE, unordered)
